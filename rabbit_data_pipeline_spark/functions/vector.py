@@ -30,12 +30,6 @@ def cosine(a: Column, b: Column) -> Column:
     return dot(ad, bd) / (norm(ad) * norm(bd))
 
 
-def l2_normalize(a: Column) -> Column:
-    ad = as_double(a)
-    n = norm(ad)
-    return F.transform(ad, lambda x: x / n)
-
-
 def hyperplane_bits(vec: Column, planes: list[list[float]]) -> Column:
     """Sign-of-projection bits against fixed hyperplanes → a bucket id
     string like '0110…'. planes ship as plan literals (they're small:

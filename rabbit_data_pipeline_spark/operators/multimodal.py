@@ -606,13 +606,6 @@ def video_frame_features(df: DataFrame, n_bins: int = 16) -> DataFrame:
     return df.mapInPandas(run, schema=out_schema)
 
 
-def repartition_for_decode(df: DataFrame, total_bytes: int, target_partition_bytes: int = 128 << 20) -> DataFrame:
-    """Size partitions by payload bytes, not row count — a 4K frame and
-    a thumbnail are not the same row."""
-    n = max(1, total_bytes // target_partition_bytes)
-    return df.repartition(int(n))
-
-
 def perceptual_hash(df: DataFrame, grid: int = 8) -> DataFrame:
     """Average-hash (aHash) perceptual fingerprint of IMG1 or real-PNG
     images (`_image_gray` routes the codec): the gray pixels are

@@ -27,19 +27,25 @@ LANG_STOPWORDS: dict[str, list[str]] = {
 }
 CJK_PATTERN = r"[\x{4e00}-\x{9fff}]"
 PUNCT_PATTERN = r"[.,;:!?]"
+# Whitespace, spelled out: Java's `\s` is exactly these six ASCII
+# characters, but RE2's `\s` (pyarrow.compute, DuckDB) leaves out \x0B.
+# Every pattern the Arrow pass or a DuckDB oracle also evaluates uses
+# this class, so all three engines split text the same way.
+WS_CHARS = r" \t\n\x0B\f\r"
+WS_RUN = f"[{WS_CHARS}]+"
 # BPE-ish pieces: runs of up to 4 alphanumerics, or a single symbol.
-BPE_PATTERN = r"[A-Za-z0-9]{1,4}|[^A-Za-z0-9\s]"
+BPE_PATTERN = f"[A-Za-z0-9]{{1,4}}|[^A-Za-z0-9{WS_CHARS}]"
 
 
 def norm_text(col: Column) -> Column:
     """Canonical form for hashing/dedup: lowercase, collapse runs of
     whitespace, trim."""
-    return F.trim(F.regexp_replace(F.lower(col), r"\s+", " "))
+    return F.trim(F.regexp_replace(F.lower(col), WS_RUN, " "))
 
 
 def ws_token_count(col: Column) -> Column:
     t = F.trim(col)
-    return F.when(F.length(t) == 0, F.lit(0)).otherwise(F.size(F.split(t, r"\s+")))
+    return F.when(F.length(t) == 0, F.lit(0)).otherwise(F.size(F.split(t, WS_RUN)))
 
 
 def bpe_token_count(col: Column) -> Column:
@@ -52,26 +58,25 @@ def token_counts_arrow(df: DataFrame, id_col: str = "doc_id", text_col: str = "t
     pyarrow.compute (RE2) — guide §4.2's "one pyarrow.compute
     expression per batch beats the equivalent chain of JVM
     expressions". Returns (id_col, ws_tokens, bpe_tokens), exactly the
-    text_tokens projection.
+    text_tokens projection, with id_col keeping its input type.
 
-    Result-identical to the JVM expressions by construction:
+    Intended to match the JVM pair row for row; these are the points
+    where the two could drift apart, and how each is kept aligned:
     - trim is space-only (`utf8_trim(_, " ")`), matching Spark/DuckDB
       `trim` — NOT utf8_trim_whitespace, which strips tabs/newlines
       and would diverge on data with non-space edges;
-    - for a space-trimmed non-empty string, `size(split(t, '\\s+'))`
+    - for a space-trimmed non-empty string, `size(split(t, WS_RUN))`
       == separator-run count + 1 (leading/trailing non-space
       whitespace contributes an empty token on the split side AND a
       run on the count side, so the identity holds for any input);
-    - the patterns are in the Java∩RE2-agreeing subset the module
-      header requires (the DuckDB oracles already evaluate them under
-      RE2, so this path uses the ORACLE's regex engine).
-    Pinned result-identical to the JVM pair on real data + edge cases
-    by tests/test_text_props.py::test_token_counts_arrow_matches_jvm.
+    - the patterns spell whitespace as WS_CHARS, never `\\s`, whose
+      meaning differs between Java and RE2 (\\x0B), and otherwise stay
+      in the Java∩RE2-agreeing subset the module header requires.
+    Checked against the JVM pair on real data, edge cases and generated
+    text by tests/test_text_props.py.
 
-    Measured (r16, min-of-5 interleaved noop): 10x documents
-    1.14 → 0.74 s (−36%); on the 0.58 MB sf0.1 table the fixed
-    boundary cost makes it a LOSS (+33%) — callers gate on
-    session.arrow_text_worthwhile."""
+    On small tables the fixed Arrow boundary cost outweighs the faster
+    regexes, so callers gate on session.arrow_text_worthwhile."""
     import pyarrow as pa
     import pyarrow.compute as pc
 
@@ -82,16 +87,17 @@ def token_counts_arrow(df: DataFrame, id_col: str = "doc_id", text_col: str = "t
             ws = pc.if_else(
                 pc.equal(pc.utf8_length(t), 0),
                 pa.scalar(0, pa.int32()),
-                pc.add(pc.count_substring_regex(t, r"\s+"), 1).cast(pa.int32()),
+                pc.add(pc.count_substring_regex(t, WS_RUN), 1).cast(pa.int32()),
             )
             bpe = pc.count_substring_regex(text, BPE_PATTERN).cast(pa.int32())
             yield pa.RecordBatch.from_arrays(
                 [b.column(id_col), ws, bpe], [id_col, "ws_tokens", "bpe_tokens"]
             )
 
+    id_type = df.schema[id_col].dataType.simpleString()
     # project FIRST: mapInArrow is opaque to column pruning (guide §4.1)
     return df.select(id_col, text_col).mapInArrow(
-        run, f"{id_col} long, ws_tokens int, bpe_tokens int"
+        run, f"{id_col} {id_type}, ws_tokens int, bpe_tokens int"
     )
 
 
@@ -108,16 +114,23 @@ def lang_scores(col: Column) -> dict[str, Column]:
 
 
 def lang_id(col: Column) -> Column:
-    """argmax over language scores, ties broken by language code asc
-    (deterministic); no hits at all → 'und' (unknown)."""
+    """The language code with the highest score in `lang_scores`.
+
+    One `array_max` over (score, tie rank, code) structs, so each score
+    is evaluated once. Structs compare field by field:
+    - the highest score wins;
+    - on a tie the alphabetically first code wins, because its tie
+      rank `-i` is the largest;
+    - a trailing ('und', score 0, rank 1) entry beats every score of 0,
+      so text with no hits at all, and null text (whose null scores
+      sort below 0), gives 'und'."""
     scores = lang_scores(col)
-    best_lang = F.lit("und")
-    best_score = F.lit(0)
-    for lang in sorted(scores, reverse=True):  # reverse so earlier codes win ties
-        s = scores[lang]
-        best_lang = F.when(s >= best_score, F.lit(lang)).otherwise(best_lang)
-        best_score = F.when(s >= best_score, s).otherwise(best_score)
-    return F.when(best_score > 0, best_lang).otherwise(F.lit("und"))
+
+    def entry(score: Column, rank: int, lang: str) -> Column:
+        return F.struct(score.alias("score"), F.lit(rank).alias("rank"), F.lit(lang).alias("lang"))
+
+    entries = [entry(scores[lang], -i, lang) for i, lang in enumerate(sorted(scores))]
+    return F.array_max(F.array(*entries, entry(F.lit(0), 1, "und"))).getField("lang")
 
 
 def quality_features(col: Column) -> dict[str, Column]:
@@ -180,7 +193,7 @@ PII_PATTERNS: dict[str, str] = {
     "email": r"[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}",
     "ssn": r"\b[0-9]{3}-[0-9]{2}-[0-9]{4}\b",
     "ipv4": r"\b(?:[0-9]{1,3}\.){3}[0-9]{1,3}\b",
-    "phone": r"\+?[0-9][0-9()\-\s]{7,}[0-9]",
+    "phone": rf"\+?[0-9][0-9()\-{WS_CHARS}]{{7,}}[0-9]",
 }
 
 
@@ -901,26 +914,6 @@ def _doc_grams(text_col: str) -> Column:
     return F.concat(words, F.filter(bigrams, lambda g: F.instr(g, " ") > 0))
 
 
-def hashed_ngram_counts(
-    df: DataFrame,
-    text_col: str = "text",
-    n_buckets: int = 64,
-) -> DataFrame:
-    """Per-bucket corpus counts of hashed word uni+bigrams — the
-    bag-of-hashed-ngrams featurization DSIR (Xie et al. 2023) builds
-    its source/target unigram models from. One explode + one bucket-
-    keyed agg (map-side combining over ≤ n_buckets keys, so the
-    shuffle carries n_buckets rows per task no matter the corpus
-    size). Returns (bucket, n)."""
-    return (
-        df.select(F.explode(_doc_grams(text_col)).alias("g"))
-        .filter(F.col("g") != "")
-        .select(_gram_bucket(F.col("g"), n_buckets).alias("bucket"))
-        .groupBy("bucket")
-        .agg(F.count("*").alias("n"))
-    )
-
-
 def dsir_log_weights(
     df: DataFrame,
     target_logprobs: list[float],
@@ -1354,13 +1347,13 @@ def sql_bm25(query_terms: list[str], k1: float = 1.2, b: float = 0.75, top_k: in
     WITH toks AS (
       SELECT doc_id AS doc, UNNEST(string_split(LOWER(text), ' ')) AS term,
              CASE WHEN trim(text) = '' THEN 0
-                  ELSE len(regexp_split_to_array(trim(text), '\\s+')) END AS dl
+                  ELSE len(regexp_split_to_array(trim(text), '{WS_RUN}')) END AS dl
       FROM documents
     ), toks2 AS (SELECT * FROM toks WHERE term != ''),
     stats AS (
       SELECT COUNT(*) AS n_docs_total,
              SUM(CASE WHEN trim(text) = '' THEN 0
-                      ELSE len(regexp_split_to_array(trim(text), '\\s+')) END) AS total_tokens
+                      ELSE len(regexp_split_to_array(trim(text), '{WS_RUN}')) END) AS total_tokens
       FROM documents
     ),
     qtoks AS (SELECT * FROM toks2 WHERE term IN ({terms})),

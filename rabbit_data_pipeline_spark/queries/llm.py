@@ -20,14 +20,13 @@ from functools import lru_cache as _lru_cache
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from rabbit_data_pipeline_spark.operators.text import BPE_PATTERN as _BPE, WS_RUN as _WS
 from rabbit_data_pipeline_spark.queries import register
 from rabbit_data_pipeline_spark.session import load_tables
 
 # ---------------------------------------------------------------- text
 
-_WS = r"\s+"
 _STOP_EN = r"\b(the|a|of|and|to|in|is|it)\b"
-_BPE = r"[A-Za-z0-9]{1,4}|[^A-Za-z0-9\s]"
 
 
 @register(
@@ -651,8 +650,8 @@ def text_word_freq(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _GRAMS_SQL = (
     "list_transform("
-    "range(1, GREATEST(len(regexp_split_to_array(trim(regexp_replace(lower(text), '\\s+', ' ', 'g')), ' ')) - 7, 1) + 1), "
-    "i -> array_to_string(list_slice(regexp_split_to_array(trim(regexp_replace(lower(text), '\\s+', ' ', 'g')), ' '), i, i + 7), ' '))"
+    f"range(1, GREATEST(len(regexp_split_to_array(trim(regexp_replace(lower(text), '{_WS}', ' ', 'g')), ' ')) - 7, 1) + 1), "
+    f"i -> array_to_string(list_slice(regexp_split_to_array(trim(regexp_replace(lower(text), '{_WS}', ' ', 'g')), ' '), i, i + 7), ' '))"
 )
 
 
@@ -760,7 +759,7 @@ def text_pack_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     return pack_sequences(t, "tokens", budget=512, n_buckets=16)
 
 
-_NORM_TOKS_SQL = "regexp_split_to_array(trim(regexp_replace(lower(text), '\\s+', ' ', 'g')), ' ')"
+_NORM_TOKS_SQL = f"regexp_split_to_array(trim(regexp_replace(lower(text), '{_WS}', ' ', 'g')), ' ')"
 
 
 @register(
@@ -1372,7 +1371,7 @@ def _search_index_oracle() -> str:
       SELECT doc_id, text FROM (
         SELECT doc_id, text,
                ROW_NUMBER() OVER (
-                 PARTITION BY md5(trim(regexp_replace(lower(text), '\\s+', ' ', 'g')))
+                 PARTITION BY md5(trim(regexp_replace(lower(text), '{_WS}', ' ', 'g')))
                  ORDER BY doc_id) AS rn
         FROM norm
       ) WHERE rn = 1

@@ -31,6 +31,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, BinaryType, DoubleType, LongType, StringType, StructField, StructType
 
+from rabbit_data_pipeline_spark.operators.text import WS_RUN
 from rabbit_data_pipeline_spark.queries import register
 
 # --------------------------------------------------------------- corpora
@@ -565,7 +566,7 @@ def _web_prep_oracle(rows: list[tuple[int, str, str]]) -> str:
     vals = ", ".join(
         f"({i}, '{u}', '{t}')".replace("\n", "' || chr(10) || '") for i, u, t in rows
     )
-    norm = "trim(regexp_replace(lower(text), '\\s+', ' ', 'g'))"
+    norm = f"trim(regexp_replace(lower(text), '{WS_RUN}', ' ', 'g'))"
     toks = f"regexp_split_to_array({norm}, ' ')"
     return f"""
     WITH d(doc_id, url, text) AS (VALUES {vals}),
@@ -955,7 +956,7 @@ def _dsir_oracle() -> str:
     WITH d(doc_id, text) AS (VALUES {_text_values(source)}),
     w AS (
       SELECT doc_id,
-             string_split(trim(regexp_replace(lower(text), '\\s+', ' ', 'g')), ' ') AS words
+             string_split(trim(regexp_replace(lower(text), '{WS_RUN}', ' ', 'g')), ' ') AS words
       FROM d
     ),
     g AS (

@@ -26,6 +26,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import DoubleType, LongType, StringType, StructField, StructType
 
 from rabbit_data_pipeline_spark.functions.exact import dsum, sql_dsum
+from rabbit_data_pipeline_spark.operators.text import WS_RUN
 from rabbit_data_pipeline_spark.queries import register
 from rabbit_data_pipeline_spark.session import EVENTS_US, load_tables
 
@@ -268,11 +269,11 @@ def stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "stream_text_prep",
-    oracle="""
+    oracle=f"""
     SELECT doc_id,
            CASE WHEN length(trim(text)) = 0 THEN 0
-                ELSE len(regexp_split_to_array(trim(text), '\\s+')) END AS ws_tokens,
-           md5(trim(regexp_replace(lower(text), '\\s+', ' ', 'g'))) AS fingerprint
+                ELSE len(regexp_split_to_array(trim(text), '{WS_RUN}')) END AS ws_tokens,
+           md5(trim(regexp_replace(lower(text), '{WS_RUN}', ' ', 'g'))) AS fingerprint
     FROM documents
     WHERE length(text) >= 50
     """,

@@ -362,6 +362,56 @@ def test_text_analysis_bundle(spark, sf_smoke):
         assert r.lang_guess in ("de", "en", "es", "fr", "zh", "und")
 
 
+# One word that scores for exactly one language.
+_LANG_WORD = {"de": "der", "en": "the", "es": "el", "fr": "le", "zh": "字"}
+
+
+def _py_lang_argmax(scores: dict[str, int | None]) -> str:
+    """Highest score wins, ties go to the alphabetically first code,
+    no positive score (or null text) gives 'und'."""
+    best = max(sorted(scores), key=lambda lang: scores[lang] or 0)
+    return best if (scores[best] or 0) > 0 else "und"
+
+
+def test_lang_id_matches_python_argmax(spark, sf_smoke):
+    from rabbit_data_pipeline_spark.operators.text import lang_id, lang_scores
+
+    texts = [None, "", "   ", "多字节", "xyz qqq", "THE Der", "de la", "la que"]
+    for a, wa in _LANG_WORD.items():
+        for b, wb in _LANG_WORD.items():
+            texts += [f"{wa} {wb}", f"{wa} {wa} {wb}"]
+    texts.append(" ".join(_LANG_WORD.values()))
+    edge = spark.createDataFrame(list(enumerate(texts)), "doc_id long, text string")
+    real = load_tables(spark, sf_smoke, ("documents",))["documents"].select("doc_id", "text")
+    langs = sorted(_LANG_WORD)
+    tied = set()
+    for df in (edge, real):
+        tc = F.col("text")
+        scores = lang_scores(tc)
+        rows = df.select(lang_id(tc).alias("got"), *[scores[lang].alias(lang) for lang in langs]).collect()
+        for r in rows:
+            s = {lang: r[lang] for lang in langs}
+            assert r.got == _py_lang_argmax(s), (r, s)
+            top = max(v or 0 for v in s.values())
+            if top > 0:
+                tied.add(tuple(lang for lang in langs if s[lang] == top))
+    # every pair of languages, and all five at once, reached a tie
+    for i, a in enumerate(langs):
+        for b in langs[i + 1 :]:
+            assert (a, b) in tied
+    assert tuple(langs) in tied
+
+
+def test_lang_id_evaluates_each_score_once(spark):
+    """Each language score appears once in the lang_id expression, so a
+    chain that copies earlier scores into later levels cannot return
+    unnoticed."""
+    from rabbit_data_pipeline_spark.operators.text import lang_id, lang_scores
+
+    expr = lang_id(F.col("text"))._jc.toString()
+    assert expr.count("regexp_count") == len(lang_scores(F.col("text"))) == 5
+
+
 def test_redact_pii_behaviors(spark):
     from pyspark.sql import functions as F
 

@@ -11,12 +11,21 @@ from collections import Counter
 from hypothesis import given, settings, strategies as st
 
 word = st.sampled_from(["aa", "bb", "cc", "dd", "spam", "x1"])
-doc = st.lists(word, min_size=1, max_size=12).map(" ".join)
+# Mostly single spaces, plus \x0B (whitespace to Java's `\s` but not to
+# RE2's) and Unicode spaces (whitespace to neither engine's `\s`).
+sep = st.sampled_from([" ", " ", " ", " ", "\t", "\n", "\x0b", "\u00a0", "\u2003", "\u3000"])
+doc = st.tuples(word, st.lists(st.tuples(sep, word), max_size=11)).map(
+    lambda t: t[0] + "".join(s + w for s, w in t[1])
+)
 corpus = st.lists(doc, min_size=1, max_size=8)
+
+# The whitespace the package's patterns match (Java's `\s`); Python's
+# own `\s` also matches Unicode spaces.
+_WS = re.compile(r"[ \t\n\x0b\f\r]+")
 
 
 def _norm_toks(text: str) -> list[str]:
-    t = re.sub(r"\s+", " ", text.lower()).strip()
+    t = _WS.sub(" ", text.lower()).strip(" ")
     return t.split(" ") if t else [""]
 
 
@@ -99,7 +108,7 @@ def _py_bm25(docs: list[str], terms: list[str], k1=1.2, b=0.75) -> dict[int, flo
 
     toks = [d.lower().split(" ") for d in docs]
     toks = [[w for w in t if w] for t in toks]
-    dls = [len(re.sub(r"\s+", " ", d.lower()).strip().split(" ")) if d.strip() else 0 for d in docs]
+    dls = [len(_WS.split(d.strip(" "))) if d.strip(" ") else 0 for d in docs]
     n = len(docs)
     avgdl = sum(dls) / n
     out: dict[int, float] = {}
@@ -161,13 +170,7 @@ def test_inverted_index_matches_python_reference(spark, docs, parts, shard):
     assert got == _py_inverted(docs, shard)
 
 
-def test_token_counts_arrow_matches_jvm(spark, sf_smoke):
-    """r16: the Arrow/RE2 token-count path (token_counts_arrow) must be
-    result-identical to the JVM expression pair on real data AND on
-    the edge cases where sloppy trim/split semantics would diverge:
-    leading/trailing tabs and newlines (Spark trim strips SPACES only,
-    and split(limit=-1) keeps the resulting empty tokens), empty and
-    whitespace-only strings, unicode, and NULL text."""
+def _assert_token_counts_arrow_matches_jvm(df):
     from pyspark.sql import functions as F
 
     from rabbit_data_pipeline_spark.operators.text import (
@@ -175,6 +178,26 @@ def test_token_counts_arrow_matches_jvm(spark, sf_smoke):
         token_counts_arrow,
         ws_token_count,
     )
+
+    jvm = df.select(
+        "doc_id",
+        ws_token_count(F.col("text")).alias("ws_tokens"),
+        bpe_token_count(F.col("text")).alias("bpe_tokens"),
+    )
+    arrow = token_counts_arrow(df)
+    assert sorted(map(tuple, arrow.collect())) == sorted(map(tuple, jvm.collect()))
+    assert [f.dataType for f in arrow.schema.fields] == [f.dataType for f in jvm.schema.fields]
+
+
+def test_token_counts_arrow_matches_jvm(spark, sf_smoke):
+    """The Arrow/RE2 token-count path (token_counts_arrow) must give
+    the JVM expression pair's results on real data AND on the edge
+    cases where sloppy trim/split semantics would diverge:
+    leading/trailing tabs and newlines (Spark trim strips SPACES only,
+    and split(limit=-1) keeps the resulting empty tokens), empty and
+    whitespace-only strings, \\x0B (whitespace to Java's `\\s`, not to
+    RE2's), unicode, and NULL text. The edge frame has an int id, the
+    real one a long id; both keep their type."""
     from rabbit_data_pipeline_spark.session import load_tables
 
     edge = [
@@ -190,16 +213,19 @@ def test_token_counts_arrow_matches_jvm(spark, sf_smoke):
         (9, " left-space only"),
         (10, "trailing newline\n"),
         (11, "a,b;c:d!e?f."),
+        (12, "a\x0bb"),
+        (13, "\x0b"),
+        (14, "x\x0b\x0by!\x0b"),
+        (15, "a\u00a0b\u2003c\u3000d"),
     ]
+    _assert_token_counts_arrow_matches_jvm(spark.createDataFrame(edge, "doc_id int, text string"))
     real = load_tables(spark, sf_smoke, ("documents",))["documents"].select("doc_id", "text")
-    for df in (spark.createDataFrame(edge, ["doc_id", "text"]), real):
-        jvm = df.select(
-            "doc_id",
-            ws_token_count(F.col("text")).alias("ws_tokens"),
-            bpe_token_count(F.col("text")).alias("bpe_tokens"),
-        )
-        arrow = token_counts_arrow(df)
-        assert sorted(map(tuple, arrow.collect())) == sorted(map(tuple, jvm.collect()))
-        assert [f.dataType for f in arrow.schema.fields] == [
-            f.dataType for f in jvm.schema.fields
-        ]
+    _assert_token_counts_arrow_matches_jvm(real)
+
+
+@given(docs=corpus)
+@settings(max_examples=10, deadline=None)
+def test_token_counts_arrow_matches_jvm_on_generated_text(spark, docs):
+    _assert_token_counts_arrow_matches_jvm(
+        spark.createDataFrame(list(enumerate(docs)), "doc_id long, text string")
+    )
