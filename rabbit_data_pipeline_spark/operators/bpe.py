@@ -90,7 +90,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from rabbit_data_pipeline_spark.functions.checkpoints import release_local_checkpoint
+from rabbit_data_pipeline_spark.functions.checkpoints import CheckpointScope
 
 #: Above this many merges, bpe_encode(engine="auto") switches from
 #: chained fold expressions to the Arrow map pass — fold depth is
@@ -311,16 +311,11 @@ def _train_distributed(
 ) -> list[tuple[int, str, str]]:
     """Batched merge rounds over a histogram DataFrame(syms, cnt):
     one top-K pair-count aggregation + one Arrow batch application per
-    round. localCheckpoint keeps the plan flat round-over-round (the
-    same re-evaluation guard dedup_minhash documents)."""
-    vocab = vocab.localCheckpoint()
-    # ADVICE r13 #2 (release-on-raise): a failed round — collect or
-    # the Arrow pass raising — must not park the live round's
-    # histogram checkpoint. The finally releases whatever `vocab`
-    # points at when the loop exits, normal or not; the helper is
-    # idempotent so the success path's terminal release below isn't
-    # double-counted.
-    try:
+    round. A per-round checkpoint keeps the plan flat round-over-round
+    (the same re-evaluation guard dedup_minhash documents); the result
+    is a plain merge list, so no checkpoint outlives the call."""
+    with CheckpointScope() as scope:
+        vocab = scope.checkpoint(vocab)
         alphabet = {
             r[0] for r in vocab.select(F.explode("syms").alias("s")).distinct().collect()
         }
@@ -346,24 +341,12 @@ def _train_distributed(
             for left, right in batch:
                 merges.append((len(merges), left, right))
                 alphabet.add(left + right)
-            new_vocab = _apply_merges_arrow(vocab, batch).localCheckpoint()
-            # eager checkpoint (default) → the superseded histogram is
-            # dead; release it instead of holding every round's vocab in
-            # executor storage until the ContextCleaner runs (see
-            # functions/checkpoints.py for the safety contract).
-            release_local_checkpoint(vocab)
+            new_vocab = scope.checkpoint(_apply_merges_arrow(vocab, batch))
+            scope.release(vocab)
             vocab = new_vocab
-        # Terminal release (round 13, the graph-loop discipline applied
-        # here too): the return value is a plain merge list — nothing
-        # reads the final histogram checkpoint, so without this every
-        # train call parks one corpus histogram in executor storage until
-        # the ContextCleaner runs.
-        release_local_checkpoint(vocab)
-        if stats is not None:
-            stats.update(strategy="distributed", rounds=rounds)
-        return merges
-    finally:
-        release_local_checkpoint(vocab)
+    if stats is not None:
+        stats.update(strategy="distributed", rounds=rounds)
+    return merges
 
 
 # -------------------------------------------------------------- front door
@@ -403,45 +386,25 @@ def train_bpe(
         raise ValueError(
             f"unknown strategy {strategy!r}: expected auto|driver|distributed|driver_topm"
         )
-    hist = _word_histogram(df, text_col).localCheckpoint()
-    # Keep the checkpoint handle: the driver_topm rebind below derives
-    # a new plan over it, and releasing a derived plan is a no-op —
-    # only this reference can free the histogram's blocks.
-    hist_ckpt = hist
-    # ADVICE r13 #2 (release-on-raise, the graph.py discipline): the
-    # early releases below free the histogram at the moment it's dead
-    # on each SUCCESS path; the finally backstops the RAISE paths
-    # (count/collect/_train_distributed failing mid-call) so a failed
-    # train never parks the corpus histogram. The helper is idempotent
-    # — a second release finds storage level NONE and no-ops — so the
-    # backstop doesn't disturb the success-path timing.
-    try:
+    # The result is a plain merge list: the scope frees the histogram
+    # checkpoint once the driver engines have collected it or the
+    # batched trainer has returned.
+    with CheckpointScope() as scope:
+        hist = scope.checkpoint(_word_histogram(df, text_col))
         if strategy == "auto":
             n_words = hist.count()  # cheap: histogram already materialized
             strategy = "driver" if n_words <= driver_max_words else "distributed"
+        if strategy == "distributed":
+            vocab = hist.select(F.split(F.col("word"), "").alias("syms"), "cnt")
+            return _train_distributed(vocab, n_merges, min_pair_count, batch_top_k, stats)
         if strategy == "driver_topm":
             hist = hist.orderBy(F.col("cnt").desc(), "word").limit(driver_max_words)
-            strategy = "driver"
-        if strategy == "driver":
-            rows = hist.collect()
-            # Terminal release (round 13): collect() was the histogram's
-            # last read — training continues on the driver over plain
-            # Python rows.
-            release_local_checkpoint(hist_ckpt)
-            if stats is not None:
-                stats.update(strategy="driver", rounds=0, words=len(rows))
-            return _train_incremental(
-                [(list(r["word"]), r["cnt"]) for r in rows], n_merges, min_pair_count
-            )
-        vocab = hist.select(F.split(F.col("word"), "").alias("syms"), "cnt")
-        merges = _train_distributed(vocab, n_merges, min_pair_count, batch_top_k, stats)
-        # _train_distributed's entry checkpoint materialized from the
-        # histogram and the returned merge list is plain Python — the
-        # histogram is dead on this path too.
-        release_local_checkpoint(hist_ckpt)
-        return merges
-    finally:
-        release_local_checkpoint(hist_ckpt)
+        rows = hist.collect()
+    if stats is not None:
+        stats.update(strategy="driver", rounds=0, words=len(rows))
+    return _train_incremental(
+        [(list(r["word"]), r["cnt"]) for r in rows], n_merges, min_pair_count
+    )
 
 
 def encode_expr(col: Column, merges: list[tuple[int, str, str]]) -> Column:
@@ -494,10 +457,10 @@ def bpe_encode(
     )
 
 
-#: Per-partition encode-memo bound (ADVICE r7): a million distinct
-#: words × ~100 bytes ≈ 100 MB/task worst case — bounded, unlike the
-#: previous unbounded dict, which grew with distinct words per
-#: partition on exactly the production corpora this path targets.
+#: Per-partition encode-memo bound: a million distinct words × ~100
+#: bytes ≈ 100 MB/task worst case. An unbounded memo would grow with
+#: distinct words per partition on exactly the production corpora this
+#: path targets.
 _ENCODE_MEMO_CAP = 1_000_000
 
 
@@ -506,8 +469,8 @@ def _make_word_encoder(ranked: list[tuple[str, str, str]], memo_cap: int | None 
     tested directly in tests/test_bpe.py — the eviction policy is
     observable there without driving Spark). ``memo_cap`` is captured
     BY VALUE so a caller-supplied cap survives the closure's pickle
-    round-trip into Spark's Python workers (ADVICE r8: a monkeypatched
-    module global never reaches the re-imported executor module)."""
+    round-trip into Spark's Python workers (a monkeypatched module
+    global never reaches the re-imported executor module)."""
     cap = _ENCODE_MEMO_CAP if memo_cap is None else memo_cap
     memo: dict[str, tuple[str, int]] = {}
 

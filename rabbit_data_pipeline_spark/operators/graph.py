@@ -19,9 +19,12 @@ Components in MapReduce and Beyond", SoCC'14; this two-step spelling
 keeps every round a plain keyed join.) Everything is DataFrame
 joins/aggregations: the per-round shuffles are on node id / label id,
 the driver only sees one `count()` per round for the convergence
-check, and `localCheckpoint` cuts the lineage so plans don't grow
-exponentially with rounds. On a cluster, set a reliable checkpoint
-dir and swap localCheckpoint→checkpoint (flag below).
+check, and a per-round checkpoint cuts the lineage so plans don't grow
+exponentially with rounds. Every loop here checkpoints through
+`functions.checkpoints.CheckpointScope`, which frees superseded rounds
+and, on every exit, whatever the result does not read; a cluster
+deployment that wants reliable checkpoints changes
+`CheckpointScope.checkpoint` alone.
 
 The pair graph is the output of the LSH/banding candidate generators,
 i.e. ~(dup families) edges, orders of magnitude smaller than the
@@ -33,7 +36,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from rabbit_data_pipeline_spark.functions.checkpoints import release_local_checkpoint
+# release_local_checkpoint is bound here for the benchmark tracer,
+# which wraps it by this name (perfbench/trace.py).
+from rabbit_data_pipeline_spark.functions.checkpoints import (  # noqa: F401
+    CheckpointScope,
+    broadcast_if_fits,
+    release_local_checkpoint,
+)
 
 
 def _broadcast_budget_rows(spark, bytes_per_row: int = 40) -> int:
@@ -47,15 +56,14 @@ def _broadcast_budget_rows(spark, bytes_per_row: int = 40) -> int:
 
     Accepts every form Spark's own byteString parser does: plain
     bytes, one-letter suffixes ("10m"), two-letter suffixes ("10MB"),
-    any case (ADVICE r15 #1: the old inline parse raised on "10mb"
-    and read "1t" as 1 byte). An unparseable value falls back to
-    Spark's 10 MB default instead of raising — a malformed session
-    conf should cost the optimization, not the query.
+    any case. An unparseable value falls back to Spark's 10 MB default
+    instead of raising — a malformed session conf should cost the
+    optimization, not the query.
 
     ``bytes_per_row`` is the approximate hashed-relation footprint of
     one build row and assumes SHORT keys (longs / small strings); rows
     with long string keys or wide payloads need a larger figure from
-    the caller (ADVICE r15 #4)."""
+    the caller."""
     raw = str(
         spark.conf.get("spark.sql.autoBroadcastJoinThreshold", "10485760")
     ).strip().lower()
@@ -79,7 +87,6 @@ def connected_components(
     id_a: str = "id_a",
     id_b: str = "id_b",
     max_iter: int = 25,
-    use_reliable_checkpoint: bool = False,
 ) -> DataFrame:
     """Resolve the pair graph into components.
 
@@ -89,82 +96,55 @@ def connected_components(
     rounds — with pointer jumping the bound is O(log diameter), so the
     default cap of 25 covers graphs with diameters up to ~2^20 and
     hitting it means the input is not a candidate-pair graph."""
-    edges = pairs.select(F.col(id_a).alias("u"), F.col(id_b).alias("v"))
-    edges = edges.unionAll(edges.select(F.col("v").alias("u"), F.col("u").alias("v"))).distinct()
-    edges = edges.localCheckpoint(eager=True)
+    # The label vector has one row per node in every round, so the node
+    # count taken once sizes every node-sized join side; broadcast them
+    # when they fit the session budget. With a budget of 0 nothing can
+    # broadcast, so the count is skipped.
+    budget = _broadcast_budget_rows(pairs.sparkSession)
+    with CheckpointScope() as scope:
+        edges = pairs.select(F.col(id_a).alias("u"), F.col(id_b).alias("v"))
+        edges = scope.checkpoint(
+            edges.unionAll(edges.select(F.col("v").alias("u"), F.col("u").alias("v"))).distinct()
+        )
+        # Lazy: the count materializes and counts in one job (or, with
+        # no count, the first round's checkpoint materializes it).
+        labels = scope.checkpoint(
+            edges.select("u").distinct().withColumn("label", F.col("u")), eager=False
+        )
+        n_nodes = labels.count() if budget else 0
 
-    # r16 (guide §3.1 — the pagerank/kcore pattern): the label vector
-    # is node-sized and its cardinality is CONSTANT across rounds (one
-    # row per node), but the checkpoints carry no statistics, so every
-    # round's edges⋈labels join re-shuffled the edge list sort-merge.
-    # Count the node set once (the lazy checkpoint + count is one job,
-    # same idiom as pagerank's node count) and broadcast every
-    # node-sized join side iff it fits the session budget; past it the
-    # shuffle shape returns by itself.
-    labels = edges.select("u").distinct().withColumn("label", F.col("u"))
-    # Reliable-checkpoint callers keep reliability for the round-0
-    # vector too (a lost localCheckpoint block is unrecoverable, not
-    # recomputable); the local path stays lazy so the count below
-    # materializes and counts in ONE job.
-    labels = (
-        labels.checkpoint(eager=True)
-        if use_reliable_checkpoint
-        else labels.localCheckpoint(eager=False)
-    )
-    n_nodes = labels.count()
-    small = 0 < n_nodes <= _broadcast_budget_rows(pairs.sparkSession)
+        def _b(df: DataFrame) -> DataFrame:
+            return broadcast_if_fits(df, n_nodes, budget)
 
-    def _b(df: DataFrame) -> DataFrame:
-        return F.broadcast(df) if small else df
-
-    for _ in range(max_iter):
-        nbr_min = (
-            edges.join(_b(labels.select(F.col("u").alias("v"), "label")), on="v")
-            .groupBy("u")
-            .agg(F.min("label").alias("nbr_label"))
-        )
-        new_labels = labels.join(_b(nbr_min), on="u", how="left").select(
-            "u", F.least("label", F.coalesce("nbr_label", F.col("label"))).alias("label")
-        )
-        # Pointer jump: label(v) <- label(label(v)). Every label value
-        # is itself a node (a min-so-far id), so a self-join resolves
-        # one extra hop and halves the remaining path length per round.
-        jump = new_labels.select(F.col("u").alias("label"), F.col("label").alias("label2"))
-        new_labels = new_labels.join(_b(jump), on="label", how="left").select(
-            "u", F.least("label", F.coalesce("label2", F.col("label"))).alias("label")
-        )
-        new_labels = (
-            new_labels.checkpoint(eager=True)
-            if use_reliable_checkpoint
-            else new_labels.localCheckpoint(eager=True)
-        )
-        changed = (
-            new_labels.join(_b(labels.select("u", F.col("label").alias("old"))), on="u")
-            .filter(F.col("label") != F.col("old"))
-            .count()
-        )
-        # The probe was the superseded round's last consumer and the
-        # new round is eager-materialized: free its blocks NOW instead
-        # of leaving up to max_iter node-vectors to the ContextCleaner
-        # (round 1 releases the initial node-set checkpoint, which the
-        # count above materialized).
-        release_local_checkpoint(labels)
-        labels = new_labels
-        if changed == 0:
-            # The result reads only the final labels checkpoint — the
-            # edge list (the call's biggest block set) is dead. Round
-            # 12: terminal release, so repeated invocation accumulates
-            # one node-vector per call, not one edge list (the same
-            # repeated-call regime the pagerank fix measured).
-            release_local_checkpoint(edges)
-            return labels.select(F.col("u").alias("id"), F.col("label").alias("component"))
-    # ADVICE r12 #3: the raise path must honor the same deterministic-
-    # release discipline as the success paths — a caller that catches
-    # the error and keeps the session alive must not inherit this
-    # call's edge list and label vector as orphaned blocks.
-    release_local_checkpoint(labels)
-    release_local_checkpoint(edges)
-    raise RuntimeError(f"connected_components did not converge in {max_iter} rounds")
+        for _ in range(max_iter):
+            nbr_min = (
+                edges.join(_b(labels.select(F.col("u").alias("v"), "label")), on="v")
+                .groupBy("u")
+                .agg(F.min("label").alias("nbr_label"))
+            )
+            new_labels = labels.join(_b(nbr_min), on="u", how="left").select(
+                "u", F.least("label", F.coalesce("nbr_label", F.col("label"))).alias("label")
+            )
+            # Pointer jump: label(v) <- label(label(v)). Every label value
+            # is itself a node (a min-so-far id), so a self-join resolves
+            # one extra hop and halves the remaining path length per round.
+            jump = new_labels.select(F.col("u").alias("label"), F.col("label").alias("label2"))
+            new_labels = scope.checkpoint(
+                new_labels.join(_b(jump), on="label", how="left").select(
+                    "u", F.least("label", F.coalesce("label2", F.col("label"))).alias("label")
+                )
+            )
+            changed = (
+                new_labels.join(_b(labels.select("u", F.col("label").alias("old"))), on="u")
+                .filter(F.col("label") != F.col("old"))
+                .count()
+            )
+            scope.release(labels)
+            labels = new_labels
+            if changed == 0:
+                scope.keep(labels)
+                return labels.select(F.col("u").alias("id"), F.col("label").alias("component"))
+        raise RuntimeError(f"connected_components did not converge in {max_iter} rounds")
 
 
 def dedup_transitive(
@@ -201,65 +181,53 @@ def connected_components_star(
     stars (u, root). Returns (id, component) for every node in
     `pairs`, component = min reachable id — the same contract as
     `connected_components`, verified equal in tests."""
-    E = (
-        pairs.select(F.col(id_a).alias("u"), F.col(id_b).alias("v"))
-        .filter(F.col("u") != F.col("v"))
-        .select(F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    # Eager: the return path joins `nodes`, and the initial E it
-    # derives from is released the moment the first star round
-    # supersedes it — a lazy nodes plan would read freed blocks.
-    nodes = (
-        E.select(F.col("u").alias("id"))
-        .unionAll(E.select("v"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    for _ in range(max_iter):
-        # large-star over the symmetrized graph
-        sym = E.unionAll(E.select(F.col("v").alias("u"), F.col("u").alias("v")))
-        mins = sym.groupBy("u").agg(F.min("v").alias("mn"))
-        mins = mins.select("u", F.least("u", "mn").alias("m"))
-        ls = (
-            sym.join(mins, on="u")
-            .filter(F.col("v") > F.col("u"))
-            .select(F.col("v").alias("a"), F.col("m").alias("b"))
-            .filter(F.col("a") != F.col("b"))
-            .select(F.greatest("a", "b").alias("u"), F.least("a", "b").alias("v"))
+    with CheckpointScope() as scope:
+        E = scope.checkpoint(
+            pairs.select(F.col(id_a).alias("u"), F.col(id_b).alias("v"))
+            .filter(F.col("u") != F.col("v"))
+            .select(F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v"))
             .distinct()
         )
-        # small-star over the (u > v)-directed edges
-        mins2 = ls.groupBy("u").agg(F.min("v").alias("mn"))
-        ss = (
-            ls.join(mins2, on="u")
-            .select(F.col("v").alias("a"), F.col("mn").alias("b"))
-            .unionAll(mins2.select(F.col("u").alias("a"), F.col("mn").alias("b")))
-            .filter(F.col("a") != F.col("b"))
-            .select(F.greatest("a", "b").alias("u"), F.least("a", "b").alias("v"))
-            .distinct()
-            .localCheckpoint(eager=True)
+        # Eager: the return path joins `nodes`, and the initial E it
+        # derives from is released once the first star round supersedes it.
+        nodes = scope.checkpoint(
+            E.select(F.col("u").alias("id")).unionAll(E.select("v")).distinct()
         )
-        changed = ss.exceptAll(E).limit(1).count() + E.exceptAll(ss).limit(1).count()
-        # `ss` is eager-materialized and the fixpoint probe was the old
-        # edge set's last read — free it (the star rounds SHRINK the
-        # edge list, so the superseded copies are the biggest blocks
-        # this loop holds).
-        release_local_checkpoint(E)
-        E = ss
-        if changed == 0:
-            comp = E.select(F.col("u").alias("id"), F.col("v").alias("component"))
-            return nodes.join(comp, on="id", how="left").select(
-                "id", F.coalesce("component", F.col("id")).alias("component")
+        for _ in range(max_iter):
+            # large-star over the symmetrized graph
+            sym = E.unionAll(E.select(F.col("v").alias("u"), F.col("u").alias("v")))
+            mins = sym.groupBy("u").agg(F.min("v").alias("mn"))
+            mins = mins.select("u", F.least("u", "mn").alias("m"))
+            ls = (
+                sym.join(mins, on="u")
+                .filter(F.col("v") > F.col("u"))
+                .select(F.col("v").alias("a"), F.col("m").alias("b"))
+                .filter(F.col("a") != F.col("b"))
+                .select(F.greatest("a", "b").alias("u"), F.least("a", "b").alias("v"))
+                .distinct()
             )
-    # ADVICE r12 #3: release-on-raise — the current edge set and node
-    # vector are this call's only live checkpoints here, and no result
-    # plan reads them on this path (unlike the success return, which
-    # reads both).
-    release_local_checkpoint(E)
-    release_local_checkpoint(nodes)
-    raise RuntimeError(f"connected_components_star did not converge in {max_iter} rounds")
+            # small-star over the (u > v)-directed edges
+            mins2 = ls.groupBy("u").agg(F.min("v").alias("mn"))
+            ss = scope.checkpoint(
+                ls.join(mins2, on="u")
+                .select(F.col("v").alias("a"), F.col("mn").alias("b"))
+                .unionAll(mins2.select(F.col("u").alias("a"), F.col("mn").alias("b")))
+                .filter(F.col("a") != F.col("b"))
+                .select(F.greatest("a", "b").alias("u"), F.least("a", "b").alias("v"))
+                .distinct()
+            )
+            changed = ss.exceptAll(E).limit(1).count() + E.exceptAll(ss).limit(1).count()
+            # The star rounds shrink the edge list, so the superseded
+            # copies are the biggest blocks this loop holds.
+            scope.release(E)
+            E = ss
+            if changed == 0:
+                scope.keep(E, nodes)
+                comp = E.select(F.col("u").alias("id"), F.col("v").alias("component"))
+                return nodes.join(comp, on="id", how="left").select(
+                    "id", F.coalesce("component", F.col("id")).alias("component")
+                )
+        raise RuntimeError(f"connected_components_star did not converge in {max_iter} rounds")
 
 
 def pagerank(
@@ -290,135 +258,94 @@ def pagerank(
     out-edge has a mirror). Under that invariant the per-iteration
     contribution aggregate already covers the exact node set, so the
     round skips the ``nodes`` left join entirely — one join and its
-    exchanges removed per iteration, results bit-identical (r15
-    guide §2.1 shuffle removal; A/B in OPTIMIZATION_r15.md). The flag
-    is an UNCHECKED caller assertion (ADVICE r15 #3): passed for a
-    graph with a zero-in-degree node, nothing raises — that node
-    silently disappears from the output and its rank mass is lost.
-    Only set it where the edge list is symmetric by construction.
+    exchanges removed per iteration, results bit-identical (A/B in
+    OPTIMIZATION_r15.md). The flag is an UNCHECKED caller assertion:
+    passed for a graph with a zero-in-degree node, nothing raises —
+    that node silently disappears from the output and its rank mass is
+    lost. Only set it where the edge list is symmetric by construction.
 
     Scale shape: out-degrees and the node set are one aggregation
     each; every iteration is one src-keyed join of the (small) score
     vector against the (large, never-moving) edge list plus one
     dst-keyed aggregation — the edge list partitioning is reused
-    across all iterations, scores are localCheckpoint'ed so the plan
-    stays flat instead of nesting k joins. The node count is the one
-    driver scalar (graph order), same class as the PQ-training
-    round-trips.
+    across all iterations, scores are checkpointed so the plan stays
+    flat instead of nesting k joins. The node count is the one driver
+    scalar (graph order), same class as the PQ-training round-trips.
 
-    ``eager=True`` (default, round 12): each round's score vector is
-    an EAGER localCheckpoint and the superseded round is released the
-    moment its successor is materialized; after the final round the
-    edge-list and node checkpoints are released too, so a call leaves
-    exactly ONE node-sized vector in executor storage (the returned
-    score, reclaimed by the ContextCleaner when the caller drops it).
-    This is the same deterministic-release discipline as the
-    peeling/frontier loops (kcore, BFS, SSSP, connected components —
-    functions/checkpoints.py). It is what repeated invocation needs:
-    under lazy cleanup each call parked ~an edge list + `iters` score
-    vectors in storage until GC happened to run (measured round 12 on
-    the 10x bench copy: 1.3 GB/call accumulating to 3.8 GB over three
-    calls, evictions spilling localCheckpoint blocks to disk, sf1
-    probe mins swinging 18 s → 70-98 s; with per-round release the
-    repeat is flat). At 100 TB the superseded vectors are
-    executor-storage pressure that evicts useful blocks — release
-    them the moment they are dead.
+    ``eager=True`` (default): each round's score vector is an EAGER
+    checkpoint and the superseded round is released the moment its
+    successor is materialized; the edge-list and node checkpoints are
+    released at return, so a call leaves exactly ONE node-sized vector
+    in executor storage (the returned score, reclaimed by the
+    ContextCleaner when the caller drops it). Under lazy cleanup each
+    call parked about an edge list plus `iters` score vectors until GC
+    happened to run, which accumulates across repeated calls (measured
+    in SCALING.md).
 
-    ``eager=False`` keeps the old contract: rounds are lazy, building
-    the result runs zero jobs, one final action materializes the
-    whole chain (callers that only explain/plan the result never
-    execute the iterations), and cleanup is the ContextCleaner's."""
-    # Materialize (src, dst, deg) ONCE: the input edge list is usually
-    # the tail of a fact-table join lineage, and without the checkpoint
-    # every iteration re-runs that lineage AND the degree aggregation
-    # (measured: q_pagerank sf0.1 27 s → the checkpointed edge list is
-    # the fix; same reason Spark's own PageRank examples cache edges).
+    ``eager=False`` keeps the lazy contract: building the result runs
+    zero round jobs, one final action materializes the whole chain
+    (callers that only explain/plan the result never execute the
+    iterations), and cleanup is the ContextCleaner's."""
+    spark = edges.sparkSession
     deg = edges.groupBy("src").agg(F.count("*").alias("deg"))
-    # r15: AQE coalesces the small join output to ONE post-shuffle
-    # partition, and a localCheckpoint freezes that — so every
-    # iteration's contribution stage re-read the whole edge list as a
-    # single task (measured: one 250 ms task per round at sf0.1).
-    # Repartition by src to the deployer-sized shuffle width before
-    # checkpointing (an explicit N is exempt from AQE coalescing):
-    # rounds then scan the edge list with full parallelism at every
-    # scale, and the hash-by-src layout is the one the per-round join
-    # wants.
-    n_part = int(edges.sparkSession.conf.get("spark.sql.shuffle.partitions", "200"))
-    wedges = (
-        edges.join(deg, "src")
-        .select("src", "dst", "deg")
-        .repartition(n_part, "src")
-        .localCheckpoint(eager=True)
-    )
-    # r15: lazy checkpoint — the graph-order count right below reads
-    # every partition, so one job materializes AND counts the node set.
-    nodes = wedges.select(F.col("src").alias("node")).distinct().localCheckpoint(eager=False)
-    n = nodes.count()
-    base = (scale * (damp_den - damp_num)) // (damp_den * n)
-    score = nodes.withColumn("score", F.lit(scale // n).cast("long"))
-    # r15 (guide §3.1): checkpointed RDDs carry no size statistics, so
-    # Catalyst planned every round's contribution join as sort-merge —
-    # RE-SHUFFLING AND SORTING THE WHOLE EDGE LIST each iteration
-    # (executed-plan evidence in OPTIMIZATION_r15.md; the repartition-
-    # before-checkpoint layout is kept for scan width but the planner
-    # forgets the hash layout across the RDD boundary). We hold the
-    # score vector's exact row count (the graph order, counted once):
-    # broadcast it whenever it fits the session's broadcast budget
-    # (~40 B/row hashed-relation footprint) — the edge list then never
-    # moves and each round is ONE node-sized exchange (the dst
-    # aggregation). Past the budget the old shuffle shape returns by
-    # itself — no behavior cliff at web-scale node counts.
-    bcast_score = 0 < n <= _broadcast_budget_rows(edges.sparkSession)
-    for i in range(iters):
-        side = score.withColumnRenamed("node", "src")
-        contrib = (
-            wedges.join(F.broadcast(side) if bcast_score else side, "src")
-            .select("dst", F.expr("score div deg").alias("c"))
+    # AQE coalesces the small join output to ONE post-shuffle
+    # partition, and a checkpoint freezes that, so every round's
+    # contribution stage would re-read the whole edge list as a single
+    # task. Repartition by src to the deployer-sized shuffle width
+    # first (an explicit N is exempt from AQE coalescing).
+    n_part = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
+    budget = _broadcast_budget_rows(spark)
+    with CheckpointScope() as scope:
+        # Materialize (src, dst, deg) ONCE: the input edge list is
+        # usually the tail of a fact-table join lineage, which every
+        # round would otherwise re-run along with the degree aggregation.
+        wedges = scope.checkpoint(
+            edges.join(deg, "src").select("src", "dst", "deg").repartition(n_part, "src")
         )
-        agg = contrib.groupBy("dst").agg(F.sum("c").alias("s"))
-        if in_complete:
-            # Every node receives ≥1 contribution, so `agg` already
-            # covers the exact node set and the left join below is an
-            # identity — skip it and its per-round exchanges. `s` is
-            # never NULL on this path, so dropping the coalesce keeps
-            # the arithmetic bit-identical.
-            new_score = (
-                agg.select(
+        # Lazy: the graph-order count materializes and counts in one job.
+        nodes = scope.checkpoint(wedges.select(F.col("src").alias("node")).distinct(), eager=False)
+        n = nodes.count()
+        base = (scale * (damp_den - damp_num)) // (damp_den * n)
+        score = nodes.withColumn("score", F.lit(scale // n).cast("long"))
+        if not eager:
+            scope.keep(wedges, nodes)  # the lazy chain reads them when it runs
+        for _ in range(iters):
+            # Broadcasting the counted score vector keeps the edge list
+            # in place: each round is then ONE node-sized exchange (the
+            # dst aggregation) instead of a sort-merge join that
+            # re-shuffles and re-sorts the whole edge list.
+            side = broadcast_if_fits(score.withColumnRenamed("node", "src"), n, budget)
+            contrib = wedges.join(side, "src").select("dst", F.expr("score div deg").alias("c"))
+            agg = contrib.groupBy("dst").agg(F.sum("c").alias("s"))
+            if in_complete:
+                # Every node receives ≥1 contribution, so `agg` already
+                # covers the exact node set and the left join below is an
+                # identity — skip it and its per-round exchanges. `s` is
+                # never NULL on this path, so dropping the coalesce keeps
+                # the arithmetic bit-identical.
+                new_score = agg.select(
                     F.col("dst").alias("node"),
                     (
                         F.lit(base) + F.expr(f"({damp_num} * s) div {damp_den}")
                     ).cast("long").alias("score"),
                 )
-                .localCheckpoint(eager=eager)
-            )
-        else:
-            new_score = (
-                nodes.join(agg.withColumnRenamed("dst", "node"), "node", "left")
-                .select(
+            else:
+                new_score = nodes.join(agg.withColumnRenamed("dst", "node"), "node", "left").select(
                     "node",
                     (
                         F.lit(base)
                         + F.expr(f"({damp_num} * coalesce(s, CAST(0 AS BIGINT))) div {damp_den}")
                     ).cast("long").alias("score"),
                 )
-                .localCheckpoint(eager=eager)
-            )
-        if eager and i > 0:
-            # new_score is materialized; the superseded round fed it
-            # and nothing else can reference it (round 0's `score` is a
-            # derived plan over `nodes`, not a checkpoint — skipped).
-            release_local_checkpoint(score)
-        score = new_score
-    out = score.select("node", (F.col("score") / F.lit(float(scale))).alias("rank"))
-    if eager and iters > 0:
-        # The final round is materialized and `out` reads only its
-        # checkpoint, so the edge-list and node checkpoints are dead.
-        # (iters=0 must NOT release: `out` is then a derived plan over
-        # the `nodes` checkpoint itself, and released localCheckpoint
-        # blocks are unrecoverable, not recomputable.)
-        release_local_checkpoint(wedges)
-        release_local_checkpoint(nodes)
-    return out
+            new_score = scope.checkpoint(new_score, eager=eager)
+            if eager:
+                scope.release(score)
+            else:
+                scope.keep(new_score)
+            score = new_score
+        # With iters=0 the result is the uniform vector over `nodes`.
+        scope.keep(score if iters else nodes)
+        return score.select("node", (F.col("score") / F.lit(float(scale))).alias("rank"))
 
 
 def bfs_distances(
@@ -439,70 +366,41 @@ def bfs_distances(
     the never-moving edge list, one dst-keyed min-agg, one anti-join
     against settled nodes; total work across all rounds is O(edges)
     because every node enters a frontier exactly once (the textbook
-    Pregel BFS). The emptiness probe is one driver boolean per round —
-    bounded by the graph diameter, not size. Settled set is
-    localCheckpoint'ed so plans stay flat."""
+    Pregel BFS). The emptiness probe is one driver count per round —
+    bounded by the graph diameter, not size. The settled set is
+    checkpointed so plans stay flat, and executor storage stays at
+    {edges + dist + 2 frontiers} whatever the hop count."""
     spark = edges.sparkSession
-    # One materialization; every round re-joins this, not its lineage.
-    edges = edges.localCheckpoint(eager=True)
-    dist = spark.createDataFrame(
-        [(s, 0) for s in sources], ["node", "dist"]
-    ).localCheckpoint(eager=True)
-    frontier = dist
-    # r16 (guide §3.1 — the pagerank/kcore pattern, VERDICT r15 #1):
-    # checkpointed RDDs carry no size statistics, so Catalyst planned
-    # BOTH per-hop joins sort-merge — re-shuffling and re-sorting the
-    # full edge list against a frontier of a few rows EVERY hop. The
-    # loop holds both small sides' exact row counts for free: the
-    # frontier count is the settled-count probe (which replaces the
-    # old isEmpty — still one job per hop over the already-eager
-    # checkpoint) and the settled set grows by exactly that count.
-    # Broadcast each side iff it fits the session budget; past it
-    # (web-scale frontiers) the shuffle shape returns by itself.
-    budget_rows = _broadcast_budget_rows(spark)
-    n_front = n_dist = len(sources)
-    for _ in range(max_hops):
-        # Rounds were always eager (localCheckpoint's default); the
-        # explicit eager=True only pins that assumption, because the
-        # releases below are ONLY safe against a fully-materialized
-        # successor. Deterministic release bounds the loop's executor
-        # storage at {edges + dist + 2 frontiers} regardless of hop
-        # count.
-        fside = F.broadcast(frontier) if 0 < n_front <= budget_rows else frontier
-        dside = F.broadcast(dist) if 0 < n_dist <= budget_rows else dist
-        new = (
-            fside.join(edges, fside["node"] == edges["src"])
-            .select(F.col("dst").alias("node"), (F.col("dist") + 1).alias("dist"))
-            .groupBy("node")
-            .agg(F.min("dist").alias("dist"))
-            .join(dside, "node", "left_anti")
-            .localCheckpoint(eager=True)
+    # Both small sides' row counts come for free: the frontier count is
+    # the per-hop emptiness probe and the settled set grows by exactly
+    # that count. Each is broadcast when it fits the session budget, so
+    # the edge list is not re-shuffled against a few-row frontier.
+    budget = _broadcast_budget_rows(spark)
+    with CheckpointScope() as scope:
+        edges = scope.checkpoint(edges)
+        dist = frontier = scope.checkpoint(
+            spark.createDataFrame([(s, 0) for s in sources], ["node", "dist"])
         )
-        n_new = new.count()
-        if n_new == 0:
-            # ADVICE r10 #4: the empty frontier was materialized by the
-            # eager checkpoint above and nothing downstream reads it —
-            # release it so the early exit leaks no superseded vector.
-            release_local_checkpoint(new)
-            break
-        new_dist = dist.unionAll(new).localCheckpoint(eager=True)
-        release_local_checkpoint(dist)  # folded into new_dist (materialized)
-        if frontier is not dist:
-            release_local_checkpoint(frontier)  # consumed building `new`
-        dist = new_dist
-        frontier = new
-        n_front = n_new
-        n_dist += n_new
-    # On ANY exit (empty-frontier break or hop exhaustion) the last
-    # non-empty frontier was already folded into dist and is dead —
-    # release it too, or one superseded vector per call outlives the
-    # loop (the same leak class ADVICE r10 #4 flagged on the break).
-    if frontier is not dist:
-        release_local_checkpoint(frontier)
-    # Terminal release (round 12): the result reads only the dist
-    # checkpoint; the edge list is dead on every exit path.
-    release_local_checkpoint(edges)
-    return dist.select("node", F.col("dist").cast("int").alias("dist"))
+        n_front = n_dist = len(sources)
+        for _ in range(max_hops):
+            fside = broadcast_if_fits(frontier, n_front, budget)
+            new = scope.checkpoint(
+                fside.join(edges, fside["node"] == edges["src"])
+                .select(F.col("dst").alias("node"), (F.col("dist") + 1).alias("dist"))
+                .groupBy("node")
+                .agg(F.min("dist").alias("dist"))
+                .join(broadcast_if_fits(dist, n_dist, budget), "node", "left_anti")
+            )
+            n_new = new.count()
+            if n_new == 0:
+                break
+            new_dist = scope.checkpoint(dist.unionAll(new))
+            scope.release(dist, frontier)
+            dist, frontier = new_dist, new
+            n_front = n_new
+            n_dist += n_new
+        scope.keep(dist)
+        return dist.select("node", F.col("dist").cast("int").alias("dist"))
 
 
 def triangle_count(edges: DataFrame) -> DataFrame:
@@ -575,69 +473,52 @@ def kcore(edges: DataFrame, k: int, max_rounds: int = 25) -> DataFrame:
     the converged answer exactly.
 
     Returns (node, deg) — survivors with their in-core degree."""
-    # One materialization; every peeling round re-joins this, not its
-    # lineage. (r15: an explicit repartition(src) before the checkpoint
-    # — pagerank's edge-list fix — was A/B-measured HERE and rejected:
-    # kcore converges in ~2 rounds on the bench graph, too few to
-    # amortize the extra setup exchange; min 2.13→2.25 s at sf0.1.)
-    edges = edges.localCheckpoint(eager=True)
-    alive = (
-        edges.select(F.col("src").alias("node")).distinct().localCheckpoint(eager=True)
+    # The convergence probe hands over the survivor set's exact row
+    # count every round: broadcast the semi-join side whenever it fits
+    # the session budget, instead of sort-merging the edge list twice.
+    budget = _broadcast_budget_rows(edges.sparkSession)
+    with CheckpointScope() as scope:
+        # One materialization; every peeling round re-joins this, not
+        # its lineage. (An explicit repartition(src) first, as pagerank
+        # does, was measured here and rejected: kcore converges in ~2
+        # rounds, too few to amortize the extra exchange.)
+        edges = scope.checkpoint(edges)
+        alive = prev = scope.checkpoint(edges.select(F.col("src").alias("node")).distinct())
+        n_alive = alive.count()
+        for _ in range(max_rounds):
+            side = broadcast_if_fits(alive, n_alive, budget)
+            # Lazy: the convergence count materializes and probes it in
+            # one job. The survivor set of the next round is a projection
+            # over this checkpoint, so a round makes one checkpoint.
+            deg = scope.checkpoint(
+                edges.join(side.withColumnRenamed("node", "src"), "src", "left_semi")
+                .join(side.withColumnRenamed("node", "dst"), "dst", "left_semi")
+                .groupBy("src")
+                .agg(F.count("*").alias("deg"))
+                .filter(F.col("deg") >= k),
+                eager=False,
+            )
+            n_next = deg.count()
+            scope.release(prev)
+            if n_next in (n_alive, 0):
+                scope.keep(deg)
+                return deg.select(F.col("src").alias("node"), "deg")
+            alive, prev, n_alive = deg.select(F.col("src").alias("node")), deg, n_next
+        raise RuntimeError(f"kcore did not converge in {max_rounds} rounds")
+
+
+def _improvements(side: DataFrame, edges: DataFrame, old: DataFrame) -> DataFrame:
+    """One relaxation out of `side` (node, dist) along `edges`
+    (src, dst, w): the (node, dist) rows that beat `old` (node, old)."""
+    return (
+        side.join(edges, side["node"] == edges["src"])
+        .select(F.col("dst").alias("node"), (F.col("dist") + F.col("w")).alias("dist"))
+        .groupBy("node")
+        .agg(F.min("dist").alias("dist"))
+        .join(old, "node", "left")
+        .filter(F.col("old").isNull() | (F.col("dist") < F.col("old")))
+        .select("node", "dist")
     )
-    n_alive = alive.count()
-    # r15: one checkpoint per round, not two — the survivor set is a
-    # trivial projection OVER the round's deg checkpoint (the plan
-    # stays flat: deg is an ExistingRDD), so materializing it again
-    # bought nothing but an extra job + storage churn per round.
-    # `prev` tracks the checkpoint backing the current `alive` frame;
-    # it is dead the moment the NEXT round's deg is materialized.
-    prev = alive
-    # r15 (guide §3.1 "pick the strategy deliberately"): the survivor
-    # set is a checkpointed RDD with NO size statistics, so Catalyst
-    # defaulted both per-round semi-joins to sort-merge — FIVE
-    # exchanges and four sorts per round (edge list shuffled twice),
-    # measured 1.5-2.2 s/round at sf0.1 for a 1.2M-row edge list. But
-    # the convergence probe hands us the survivor set's EXACT row
-    # count every round: broadcast the semi-join side whenever the
-    # counted size fits the session's broadcast budget (~40 B/row
-    # hashed-relation footprint). At web-scale node counts the budget
-    # fails and the plan degrades to the old shuffle shape by itself.
-    bcast_rows = _broadcast_budget_rows(edges.sparkSession)
-    for _ in range(max_rounds):
-        side = F.broadcast(alive) if 0 < n_alive <= bcast_rows else alive
-        deg = (
-            edges.join(side.withColumnRenamed("node", "src"), "src", "left_semi")
-            .join(side.withColumnRenamed("node", "dst"), "dst", "left_semi")
-            .groupBy("src")
-            .agg(F.count("*").alias("deg"))
-            .filter(F.col("deg") >= k)
-            # r15: lazy — the convergence count right below computes
-            # EVERY partition, so it both materializes the checkpoint
-            # and probes it in ONE job instead of two per round.
-            .localCheckpoint(eager=False)
-        )
-        n_next = deg.count()
-        # deg is materialized; the checkpoint backing the survivor set
-        # that produced it is superseded on every path below.
-        release_local_checkpoint(prev)
-        if n_next == n_alive:
-            # Fixpoint: the result reads only this round's deg
-            # checkpoint — the edge list is dead (round-12 terminal
-            # release; see connected_components).
-            release_local_checkpoint(edges)
-            return deg.select(F.col("src").alias("node"), "deg")
-        alive = deg.select(F.col("src").alias("node"))
-        prev = deg
-        n_alive = n_next
-        if n_alive == 0:
-            release_local_checkpoint(edges)
-            return deg.select(F.col("src").alias("node"), "deg")
-    # ADVICE r12 #3: release-on-raise — each round released its
-    # superseded checkpoint, so the edge list and the last deg are the
-    # only live checkpoints at exhaustion.
-    release_local_checkpoint(edges)
-    release_local_checkpoint(prev)
-    raise RuntimeError(f"kcore did not converge in {max_rounds} rounds")
 
 
 def weighted_sssp(
@@ -660,96 +541,35 @@ def weighted_sssp(
 
     Returns (node, dist) for reachable nodes."""
     spark = edges.sparkSession
-    # One materialization; every relaxation round re-joins this, not
-    # its lineage.
-    edges = edges.localCheckpoint(eager=True)
-    dist = spark.createDataFrame([(s, 0) for s in sources], ["node", "dist"]).localCheckpoint(
-        eager=True
-    )
-    frontier = dist
-    # r16 (guide §3.1 — the pagerank/kcore pattern, VERDICT r15 #1):
-    # without this, the no-stats checkpoints made every per-round join
-    # sort-merge, re-shuffling the full edge list each relaxation. The
-    # frontier count is the improvement probe (replacing isEmpty, same
-    # one job per round); the distance vector's count is tracked as an
-    # upper bound (improved rows may REPLACE existing entries, so the
-    # exact count would cost an extra job — a too-big bound only
-    # forfeits the broadcast, never correctness). Past the budget the
-    # shuffle shape returns by itself.
-    budget_rows = _broadcast_budget_rows(spark)
-    n_front = n_dist_max = len(sources)
-    for _ in range(max_rounds):
-        fside = F.broadcast(frontier) if 0 < n_front <= budget_rows else frontier
-        old = dist.withColumnRenamed("dist", "old")
-        oside = F.broadcast(old) if 0 < n_dist_max <= budget_rows else old
-        cand = (
-            fside.join(edges, fside["node"] == edges["src"])
-            .select(F.col("dst").alias("node"), (F.col("dist") + F.col("w")).alias("dist"))
-            .groupBy("node")
-            .agg(F.min("dist").alias("dist"))
+    # The frontier count is the per-round improvement probe; the
+    # distance vector's count is tracked as an upper bound (improved
+    # rows may replace existing entries, and the exact count would cost
+    # a job). A too-big bound only forfeits a broadcast.
+    budget = _broadcast_budget_rows(spark)
+    with CheckpointScope() as scope:
+        edges = scope.checkpoint(edges)
+        dist = frontier = scope.checkpoint(
+            spark.createDataFrame([(s, 0) for s in sources], ["node", "dist"])
         )
-        improved = (
-            cand.join(oside, "node", "left")
-            .filter(F.col("old").isNull() | (F.col("dist") < F.col("old")))
-            .select("node", "dist")
-            .localCheckpoint(eager=True)
-        )
-        n_imp = improved.count()
-        if n_imp == 0:
-            # ADVICE r10 #4: `improved` was eagerly materialized and is
-            # dead on this path — release before returning, along with
-            # the previous round's frontier (folded into dist already)
-            # and (round 12, terminal release) the edge list: the
-            # returned dist checkpoint is all the caller reads.
-            release_local_checkpoint(improved)
-            if frontier is not dist:
-                release_local_checkpoint(frontier)
-            release_local_checkpoint(edges)
-            return dist
-        iside = (
-            F.broadcast(improved.select("node"))
-            if 0 < n_imp <= budget_rows
-            else improved.select("node")
-        )
-        new_dist = (
-            dist.join(iside, "node", "left_anti")
-            .unionAll(improved)
-            .localCheckpoint(eager=True)
-        )
-        # new_dist is materialized: the superseded distance vector and
-        # the consumed frontier (last round's `improved`) are dead —
-        # without the release a long relaxation holds every round's
-        # vector until the ContextCleaner runs.
-        release_local_checkpoint(dist)
-        if frontier is not dist:
-            release_local_checkpoint(frontier)
-        dist = new_dist
-        frontier = improved
-        n_front = n_imp
-        n_dist_max += n_imp
-    # Round exhaustion: the last frontier is folded into dist — dead.
-    if frontier is not dist:
-        release_local_checkpoint(frontier)
-    # converged iff one more relaxation changes nothing
-    dside = F.broadcast(dist) if 0 < n_dist_max <= budget_rows else dist
-    cand = (
-        dside.join(edges, dside["node"] == edges["src"])
-        .select(F.col("dst").alias("node"), (F.col("dist") + F.col("w")).alias("dist"))
-        .groupBy("node")
-        .agg(F.min("dist").alias("dist"))
-    )
-    still = cand.join(dist.withColumnRenamed("dist", "old"), "node", "left").filter(
-        F.col("old").isNull() | (F.col("dist") < F.col("old"))
-    )
-    if not still.isEmpty():
-        # ADVICE r12 #3: release-on-raise — the distance vector and
-        # edge list are the call's only live checkpoints here (the
-        # last frontier was released above), and the caller gets no
-        # DataFrame that could read them.
-        release_local_checkpoint(dist)
-        release_local_checkpoint(edges)
-        raise RuntimeError(f"weighted_sssp did not converge in {max_rounds} rounds")
-    # The convergence probe above was the edge list's last read
-    # (round-12 terminal release).
-    release_local_checkpoint(edges)
-    return dist
+        n_front = n_dist_max = len(sources)
+        for _ in range(max_rounds):
+            old = broadcast_if_fits(dist.withColumnRenamed("dist", "old"), n_dist_max, budget)
+            improved = scope.checkpoint(
+                _improvements(broadcast_if_fits(frontier, n_front, budget), edges, old)
+            )
+            n_imp = improved.count()
+            if n_imp == 0:
+                scope.keep(dist)
+                return dist
+            gone = broadcast_if_fits(improved.select("node"), n_imp, budget)
+            new_dist = scope.checkpoint(dist.join(gone, "node", "left_anti").unionAll(improved))
+            scope.release(dist, frontier)
+            dist, frontier = new_dist, improved
+            n_front = n_imp
+            n_dist_max += n_imp
+        # converged iff one more relaxation changes nothing
+        dside = broadcast_if_fits(dist, n_dist_max, budget)
+        if not _improvements(dside, edges, dist.withColumnRenamed("dist", "old")).isEmpty():
+            raise RuntimeError(f"weighted_sssp did not converge in {max_rounds} rounds")
+        scope.keep(dist)
+        return dist

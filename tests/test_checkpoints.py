@@ -1,21 +1,28 @@
-"""Deterministic release of superseded localCheckpoints (round 10).
+"""Storage bounds of the iterative loops' localCheckpoints.
 
-The iterative graph/BPE loops cut lineage with per-round
-localCheckpoints; without an explicit unpersist the superseded
-rounds' blocks sit in executor storage until the ContextCleaner
-happens to run — up to max_iter node-vectors of waste (an OOM vector
-at 100 TB, GC noise locally). These tests pin (a) the helper's
-contract — releases exactly a checkpoint's blocks, refuses derived
-plans, never breaks live data — and (b) the loops' storage bound:
-finishing a multi-round iteration leaves only the blocks the result
-still needs.
+The graph and BPE loops cut lineage with one checkpoint per round,
+owned by a ``CheckpointScope``. Without an explicit release the
+superseded rounds' blocks sit in executor storage until the
+ContextCleaner happens to run. These tests pin (a) the release helper's
+contract: it releases exactly a checkpoint's blocks, refuses derived
+plans, and never breaks live data; (b) the scope's contract: release on
+every exit, except what is kept; and (c) every loop's storage bound on
+its success, non-convergence and mid-round-exception paths: a call
+leaves only the blocks its result still reads.
 """
 
 from __future__ import annotations
 
+import sys
+
+import pytest
 from pyspark.sql import functions as F
 
-from rabbit_data_pipeline_spark.functions.checkpoints import release_local_checkpoint
+from rabbit_data_pipeline_spark.functions.checkpoints import (
+    CheckpointScope,
+    release_local_checkpoint,
+)
+from rabbit_data_pipeline_spark.operators import bpe, graph
 
 
 def _persistent_ids(spark) -> set[int]:
@@ -51,289 +58,314 @@ def test_release_refuses_unpersisted_logical_rdd(spark):
     assert df.count() == 2
 
 
-def test_connected_components_storage_stays_bounded(spark):
-    """A 9-node chain forces ~4 pointer-jump rounds; without the
-    per-round release the loop would leave edges + every round's
-    labels persisted (6+ RDDs). With it (round 12: the edge list is
-    released on the success path too): final labels only."""
-    from rabbit_data_pipeline_spark.operators.graph import connected_components
+# ------------------------------------------------------------ the scope
 
-    pairs = spark.createDataFrame(
-        [(i, i + 1) for i in range(9)], ["id_a", "id_b"]
-    )
+
+def test_scope_releases_all_but_kept_on_exit(spark):
     before = _persistent_ids(spark)
-    comp = connected_components(pairs)
-    rows = {r["id"]: r["component"] for r in comp.collect()}
-    assert set(rows.values()) == {0} and len(rows) == 10  # one chain, min label
-    leaked = _persistent_ids(spark) - before
-    assert len(leaked) <= 1, f"superseded rounds left persisted: {sorted(leaked)}"
+    with CheckpointScope() as scope:
+        a = scope.checkpoint(spark.range(10))
+        b = scope.checkpoint(spark.range(20))
+        lazy = scope.checkpoint(spark.range(30), eager=False)
+        assert lazy.count() == 30  # a lazy checkpoint materializes on its first action
+        scope.release(a)
+        scope.release(a, b.filter(F.col("id") > 3))  # repeats and derived plans are no-ops
+        scope.keep(b)
+    assert len(_persistent_ids(spark) - before) == 1  # only the kept frame
+    assert b.count() == 20
 
 
-def test_kcore_storage_stays_bounded(spark):
-    """A triangle with a pendant chain peels over ≥2 rounds; the loop
-    must leave only the final deg checkpoint persisted (round 12:
-    edges and the survivor set release on the fixpoint path)."""
-    from rabbit_data_pipeline_spark.operators.graph import kcore
+def test_scope_releases_on_exception(spark):
+    before = _persistent_ids(spark)
+    with pytest.raises(ValueError, match="boom"):
+        with CheckpointScope() as scope:
+            scope.checkpoint(spark.range(10))
+            raise ValueError("boom")
+    assert not (_persistent_ids(spark) - before)
 
-    und = [(0, 1), (1, 2), (0, 2), (2, 3), (3, 4)]
+
+def test_connected_components_estimate_does_not_compound(spark):
+    """Each round joins the previous labels with themselves; a
+    checkpoint that carried its plan's size estimate forward doubled
+    the estimate's bit length every round (about 48,000 bits on this
+    chain), until Catalyst stalled in BigInteger arithmetic on deeper
+    graphs."""
+    pairs = spark.createDataFrame([(i, i + 1) for i in range(200)], ["id_a", "id_b"])
+    comp = graph.connected_components(pairs)
+    # py4j hands the estimate over as a decimal string
+    limit = sys.get_int_max_str_digits()
+    sys.set_int_max_str_digits(0)
+    try:
+        bits = comp._jdf.queryExecution().optimizedPlan().stats().sizeInBytes().bit_length()
+    finally:
+        sys.set_int_max_str_digits(limit)
+    assert bits < 128, f"size estimate grew to {bits} bits"
+    assert {r["component"] for r in comp.collect()} == {0}
+
+
+# --------------------------------------------------- the loops' bounds
+
+
+def _chain_pairs(spark, n=9):
+    return spark.createDataFrame([(i, i + 1) for i in range(n)], ["id_a", "id_b"])
+
+
+def _symmetric(spark, und, cols=("src", "dst")):
+    return spark.createDataFrame(und + [(b, a) for a, b in und], list(cols))
+
+
+def _cc(spark, **kw):
+    rows = graph.connected_components(_chain_pairs(spark), **kw).collect()
+    return {r["id"]: r["component"] for r in rows}
+
+
+def _cc_star(spark, **kw):
+    rows = graph.connected_components_star(_chain_pairs(spark), **kw).collect()
+    return {r["id"]: r["component"] for r in rows}
+
+
+def _pagerank(spark, **kw):
+    und = [(i, (i + 1) % 7) for i in range(7)] + [(0, 3), (2, 5)]
+    return {r["node"]: r["rank"] for r in graph.pagerank(_symmetric(spark, und), **kw).collect()}
+
+
+def _bfs(spark, **kw):
+    edges = spark.createDataFrame([(str(i), str(i + 1)) for i in range(6)], ["src", "dst"])
+    return {r["node"]: r["dist"] for r in graph.bfs_distances(edges, ["0"], **kw).collect()}
+
+
+def _kcore(spark, **kw):
+    # a triangle with a pendant chain: the chain peels over two rounds
+    edges = _symmetric(spark, [(0, 1), (1, 2), (0, 2), (2, 3), (3, 4)])
+    return {r["node"] for r in graph.kcore(edges, k=2, **kw).collect()}
+
+
+def _sssp(spark, **kw):
     edges = spark.createDataFrame(
-        und + [(b, a) for a, b in und], ["src", "dst"]
+        [("a", "b", 5), ("b", "c", 1), ("a", "c", 9), ("c", "d", 2)], ["src", "dst", "w"]
     )
+    return {r["node"]: r["dist"] for r in graph.weighted_sssp(edges, ["a"], **kw).collect()}
+
+
+LOOPS = {
+    "connected_components": _cc,
+    "connected_components_star": _cc_star,
+    "pagerank": _pagerank,
+    "bfs_distances": _bfs,
+    "kcore": _kcore,
+    "weighted_sssp": _sssp,
+}
+
+# loop -> (expected result or None, persisted RDDs the result reads)
+SUCCESS = {
+    "connected_components": ({i: 0 for i in range(10)}, 1),
+    # the star result joins the node set with the final edge set
+    "connected_components_star": ({i: 0 for i in range(10)}, 2),
+    "pagerank": (None, 1),
+    "bfs_distances": ({str(i): i for i in range(7)}, 1),
+    "kcore": ({0, 1, 2}, 1),
+    "weighted_sssp": ({"a": 0, "b": 5, "c": 6, "d": 8}, 1),
+}
+
+# loop -> (kwargs that stop it early, expected error or None for a
+# truncated result, persisted RDDs the result reads). pagerank runs a
+# fixed number of rounds and has no such path.
+EARLY_EXIT = {
+    "connected_components": ({"max_iter": 1}, "did not converge", 0),
+    "connected_components_star": ({"max_iter": 1}, "did not converge", 0),
+    "kcore": ({"max_rounds": 1}, "did not converge", 0),
+    "weighted_sssp": ({"max_rounds": 1}, "did not converge", 0),
+    "bfs_distances": ({"max_hops": 2}, None, 1),
+}
+
+
+def _check_success(spark, name):
+    expected, kept = SUCCESS[name]
     before = _persistent_ids(spark)
-    result = {r["node"] for r in kcore(edges, k=2).collect()}
-    assert result == {0, 1, 2}  # the triangle survives, the chain peels
+    got = LOOPS[name](spark)
+    if expected is not None:
+        assert got == expected
     leaked = _persistent_ids(spark) - before
-    assert len(leaked) <= 1, f"superseded rounds left persisted: {sorted(leaked)}"
+    assert len(leaked) <= kept, f"superseded rounds left persisted: {sorted(leaked)}"
+    return got
+
+
+def _check_early_exit(spark, name):
+    kw, error, kept = EARLY_EXIT[name]
+    before = _persistent_ids(spark)
+    if error:
+        with pytest.raises(RuntimeError, match=error):
+            LOOPS[name](spark, **kw)
+    else:
+        assert LOOPS[name](spark, **kw) == {"0": 0, "1": 1, "2": 2}
+    leaked = _persistent_ids(spark) - before
+    assert len(leaked) <= kept, f"early exit left persisted RDDs: {sorted(leaked)}"
+
+
+def test_connected_components_storage_stays_bounded(spark):
+    _check_success(spark, "connected_components")
+
+
+def test_connected_components_star_storage_stays_bounded(spark):
+    _check_success(spark, "connected_components_star")
+
+
+def test_pagerank_eager_releases_and_agrees(spark):
+    """The eager rounds leave one score vector, and their values are
+    bit-identical to the lazy chain's (integer arithmetic). eager=False
+    materializes no round inside the call, so every checkpoint its plan
+    reads must survive the call."""
+    assert _check_success(spark, "pagerank") == _pagerank(spark, iters=6, eager=False)
 
 
 def test_bfs_eager_rounds_release_and_agree(spark):
-    """BFS rounds are eager + released on EVERY exit path (round 11:
-    the last folded frontier too); distances are unchanged and a
-    6-hop path leaves only the final dist checkpoint (round 12:
-    the edge list releases on every exit path)."""
-    from rabbit_data_pipeline_spark.operators.graph import bfs_distances
+    _check_success(spark, "bfs_distances")
 
-    edges = spark.createDataFrame(
-        [(str(i), str(i + 1)) for i in range(6)], ["src", "dst"]
-    )
-    before = _persistent_ids(spark)
-    dist = {r["node"]: r["dist"] for r in bfs_distances(edges, ["0"]).collect()}
-    assert dist == {str(i): i for i in range(7)}
-    leaked = _persistent_ids(spark) - before
-    assert len(leaked) <= 1, f"superseded rounds left persisted: {sorted(leaked)}"
+
+def test_kcore_storage_stays_bounded(spark):
+    _check_success(spark, "kcore")
 
 
 def test_weighted_sssp_releases_and_agrees(spark):
-    from rabbit_data_pipeline_spark.operators.graph import weighted_sssp
+    _check_success(spark, "weighted_sssp")
 
-    edges = spark.createDataFrame(
-        [("a", "b", 5), ("b", "c", 1), ("a", "c", 9), ("c", "d", 2)],
-        ["src", "dst", "w"],
-    )
+
+def test_connected_components_raise_path_releases(spark):
+    _check_early_exit(spark, "connected_components")
+
+
+def test_connected_components_star_raise_path_releases(spark):
+    _check_early_exit(spark, "connected_components_star")
+
+
+def test_kcore_raise_path_releases(spark):
+    _check_early_exit(spark, "kcore")
+
+
+def test_weighted_sssp_raise_path_releases(spark):
+    _check_early_exit(spark, "weighted_sssp")
+
+
+def test_bfs_hop_limit_releases(spark):
+    _check_early_exit(spark, "bfs_distances")
+
+
+# (loop, which count() call raises): the second count is a probe inside
+# the first round, after that round's checkpoint is materialized;
+# pagerank's one count is the node count.
+MID_ROUND = [
+    ("connected_components", 2),
+    ("connected_components_star", 2),
+    ("pagerank", 1),
+    ("bfs_distances", 2),
+    ("kcore", 2),
+    ("weighted_sssp", 2),
+]
+
+
+@pytest.mark.parametrize("name,nth", MID_ROUND, ids=[s[0] for s in MID_ROUND])
+def test_loop_mid_round_exception_releases(spark, monkeypatch, name, nth):
+    frame_type = type(spark.range(1))
+    count = frame_type.count
+    calls = []
+
+    def failing_count(self):
+        calls.append(1)
+        if len(calls) == nth:
+            raise RuntimeError("executor lost mid-round")
+        return count(self)
+
+    monkeypatch.setattr(frame_type, "count", failing_count)
     before = _persistent_ids(spark)
-    dist = {r["node"]: r["dist"] for r in weighted_sssp(edges, ["a"]).collect()}
-    assert dist == {"a": 0, "b": 5, "c": 6, "d": 8}
+    with pytest.raises(RuntimeError, match="executor lost"):
+        LOOPS[name](spark)
     leaked = _persistent_ids(spark) - before
-    assert len(leaked) <= 1, f"superseded rounds left persisted: {sorted(leaked)}"
+    assert not leaked, f"mid-round exception left persisted RDDs: {sorted(leaked)}"
 
 
 def test_iterative_storage_is_round_independent(spark):
-    """The 100 TB claim behind the release discipline, pinned: the
-    persisted set a frontier loop leaves behind is its INVARIANT set
-    (the final dist checkpoint), independent of how many rounds ran. A chain
-    graph forces one round per node — 3× the rounds must leak exactly
-    as much as 1×. (Without the per-round + exit-path releases, the
-    leak grows linearly in rounds: one superseded node-vector each.)"""
-    from rabbit_data_pipeline_spark.operators.graph import bfs_distances
-
+    """The persisted set a frontier loop leaves behind is its invariant
+    set (the final dist checkpoint), independent of how many rounds
+    ran: a chain forces one round per node, and 3× the rounds must
+    leave exactly as much as 1×."""
     leaks = {}
     for n in (8, 24):
-        edges = spark.createDataFrame(
-            [(str(i), str(i + 1)) for i in range(n)], ["src", "dst"]
-        )
+        edges = spark.createDataFrame([(str(i), str(i + 1)) for i in range(n)], ["src", "dst"])
         before = _persistent_ids(spark)
-        dist = {r["node"]: r["dist"] for r in bfs_distances(edges, ["0"], max_hops=n + 2).collect()}
+        rows = graph.bfs_distances(edges, ["0"], max_hops=n + 2).collect()
+        dist = {r["node"]: r["dist"] for r in rows}
         assert dist == {str(i): i for i in range(n + 1)}
         leaks[n] = len(_persistent_ids(spark) - before)
     assert leaks[24] <= leaks[8] <= 1, f"leak grew with round count: {leaks}"
 
 
-def test_pagerank_eager_releases_and_agrees(spark):
-    """Round 12: pagerank was the one iterative loop still relying on
-    the ContextCleaner — each call parked the edge-list checkpoint plus
-    `iters` superseded score vectors in executor storage until GC
-    happened to run (measured on the 10x bench copy: 1.3 GB/call,
-    accumulating to 3.8 GB over three calls, localCheckpoint blocks
-    spilling to disk, sf1 probe mins swinging 18 s -> 70-98 s). With
-    eager=True (now the default) rounds release deterministically and
-    a finished call leaves exactly ONE node-sized vector (the returned
-    score); values are bit-identical to the lazy chain."""
-    from rabbit_data_pipeline_spark.operators.graph import pagerank
-
-    und = [(i, (i + 1) % 7) for i in range(7)] + [(0, 3), (2, 5)]
-    edges = spark.createDataFrame(
-        und + [(b, a) for a, b in und], ["src", "dst"]
-    ).distinct()
-
-    before = _persistent_ids(spark)
-    eager_rows = {r["node"]: r["rank"] for r in pagerank(edges, iters=4).collect()}
-    leaked = _persistent_ids(spark) - before
-    assert len(leaked) <= 1, f"superseded rounds left persisted: {sorted(leaked)}"
-
-    lazy_rows = {r["node"]: r["rank"] for r in pagerank(edges, iters=4, eager=False).collect()}
-    assert eager_rows == lazy_rows  # integer arithmetic: bit-identical
-
-
 def test_pagerank_storage_is_round_independent(spark):
-    """The leak bound must not grow with iteration count: 3x the
-    rounds leaves the same single returned-score vector."""
-    from rabbit_data_pipeline_spark.operators.graph import pagerank
-
-    edges = spark.createDataFrame(
-        [(i, (i + 1) % 5) for i in range(5)], ["src", "dst"]
-    )
+    edges = spark.createDataFrame([(i, (i + 1) % 5) for i in range(5)], ["src", "dst"])
     leaks = {}
     for iters in (3, 9):
         before = _persistent_ids(spark)
-        assert pagerank(edges, iters=iters).count() == 5
+        assert graph.pagerank(edges, iters=iters).count() == 5
         leaks[iters] = len(_persistent_ids(spark) - before)
     assert leaks[9] <= leaks[3] <= 1, f"leak grew with round count: {leaks}"
 
 
 def test_pagerank_zero_iters_keeps_inputs_readable(spark):
     """iters=0 returns the uniform vector as a derived plan over the
-    `nodes` checkpoint — the eager release path must NOT free it
-    (released localCheckpoint blocks are unrecoverable, not
-    recomputable), and the result must still collect."""
-    from rabbit_data_pipeline_spark.operators.graph import pagerank
-
+    node checkpoint, which must not be released."""
     edges = spark.createDataFrame([(0, 1), (1, 0)], ["src", "dst"])
-    rows = pagerank(edges, iters=0).collect()
+    rows = graph.pagerank(edges, iters=0).collect()
     assert {r["node"] for r in rows} == {0, 1}
     assert all(abs(r["rank"] - 0.5) < 1e-9 for r in rows)
 
 
-# ---------------------------------- r13: release on the raise paths
-# ADVICE r12 #3: a caller that catches the non-convergence error and
-# keeps the session alive must not inherit the call's edge-list/
-# vector checkpoints as orphaned blocks — the raise paths must honor
-# the same deterministic-release discipline as the success paths.
+# ---------------------------------------------------------------- BPE
 
 
-def test_connected_components_raise_path_releases(spark):
-    import pytest
-
-    from rabbit_data_pipeline_spark.operators.graph import connected_components
-
-    pairs = spark.createDataFrame([(i, i + 1) for i in range(1, 9)], ["id_a", "id_b"])
-    before = _persistent_ids(spark)
-    with pytest.raises(RuntimeError, match="did not converge"):
-        connected_components(pairs, max_iter=1)
-    leaked = _persistent_ids(spark) - before
-    assert not leaked, f"raise path left persisted RDDs: {sorted(leaked)}"
-
-
-def test_connected_components_star_raise_path_releases(spark):
-    import pytest
-
-    from rabbit_data_pipeline_spark.operators.graph import connected_components_star
-
-    pairs = spark.createDataFrame([(i, i + 1) for i in range(1, 9)], ["id_a", "id_b"])
-    before = _persistent_ids(spark)
-    with pytest.raises(RuntimeError, match="did not converge"):
-        connected_components_star(pairs, max_iter=1)
-    leaked = _persistent_ids(spark) - before
-    assert not leaked, f"raise path left persisted RDDs: {sorted(leaked)}"
-
-
-def test_kcore_raise_path_releases(spark):
-    import pytest
-
-    from rabbit_data_pipeline_spark.operators.graph import kcore
-
-    chain = [(i, i + 1) for i in range(1, 6)]
-    edges = spark.createDataFrame(
-        chain + [(b, a) for a, b in chain], ["src", "dst"]
-    )
-    before = _persistent_ids(spark)
-    with pytest.raises(RuntimeError, match="did not converge"):
-        kcore(edges, k=2, max_rounds=1)
-    leaked = _persistent_ids(spark) - before
-    assert not leaked, f"raise path left persisted RDDs: {sorted(leaked)}"
-
-
-def test_weighted_sssp_raise_path_releases(spark):
-    import pytest
-
-    from rabbit_data_pipeline_spark.operators.graph import weighted_sssp
-
-    edges = spark.createDataFrame(
-        [("a", "b", 1), ("b", "c", 1), ("c", "d", 1)], ["src", "dst", "w"]
-    )
-    before = _persistent_ids(spark)
-    with pytest.raises(RuntimeError, match="did not converge"):
-        weighted_sssp(edges, sources=["a"], max_rounds=1)
-    leaked = _persistent_ids(spark) - before
-    assert not leaked, f"raise path left persisted RDDs: {sorted(leaked)}"
-
-
-def test_train_bpe_releases_histogram_on_every_strategy(spark):
-    """r13: train_bpe returns a plain Python merge list, so every
-    internal checkpoint (the word histogram; the batched trainer's
-    per-round vocab) is dead at return — no strategy may leave
-    persisted RDDs behind. The driver_topm path is the sharp edge: it
-    REBINDS hist to a derived plan, so only a kept handle can release
-    the underlying checkpoint."""
-    from rabbit_data_pipeline_spark.operators.bpe import train_bpe
-
-    df = spark.createDataFrame(
+def _bpe_docs(spark):
+    return spark.createDataFrame(
         [(i, "low lower lowest newer newest wide widely") for i in range(20)],
         ["doc_id", "text"],
     )
-    expected = None
-    for strategy in ("driver", "driver_topm", "distributed"):
+
+
+def test_train_bpe_releases_histogram_on_every_strategy(spark):
+    """train_bpe returns a plain merge list, so no strategy may leave a
+    persisted RDD behind, and releasing must not change the merges.
+    driver_topm rebinds the histogram to a derived plan, which only the
+    scope's own handle can release."""
+    df = _bpe_docs(spark)
+    merges = {}
+    for strategy in ("auto", "driver", "driver_topm", "distributed"):
         before = _persistent_ids(spark)
-        merges = train_bpe(df, n_merges=6, strategy=strategy)
+        merges[strategy] = [(l, r) for _, l, r in bpe.train_bpe(df, n_merges=6, strategy=strategy)]
         leaked = _persistent_ids(spark) - before
         assert not leaked, f"{strategy} left persisted RDDs: {sorted(leaked)}"
-        # the release must not change the trained merges
-        pairs = [(l, r) for _, l, r in merges]
-        if expected is None:
-            expected = pairs
-        else:
-            assert pairs == expected, f"{strategy} merges diverged after release"
+    assert len(set(map(tuple, merges.values()))) == 1, merges
 
 
-# ------------------------------- r14: BPE release on the raise paths
-# ADVICE r13 #2: the r13 terminal releases freed the histogram on the
-# SUCCESS paths only — a strategy dispatch that raises mid-training
-# (collect failing, a bad Arrow batch) parked the corpus histogram
-# until the ContextCleaner ran. train_bpe and _train_distributed now
-# carry the same try/finally backstop graph.py got in r13.
-
-
-def test_train_bpe_raise_in_dispatch_releases_histogram(spark, monkeypatch):
-    """A _train_distributed that dies mid-call must not leave the
-    front door's hist_ckpt persisted."""
-    import pytest
-
-    from rabbit_data_pipeline_spark.operators import bpe
-
-    df = spark.createDataFrame(
-        [(i, "low lower lowest newer newest") for i in range(10)],
-        ["doc_id", "text"],
-    )
-
+def _check_bpe_raise(spark, monkeypatch, strategy, owner, target):
     def boom(*a, **k):
         raise RuntimeError("executor lost mid-train")
 
-    monkeypatch.setattr(bpe, "_train_distributed", boom)
+    monkeypatch.setattr(owner, target, boom)
+    df = _bpe_docs(spark)
     before = _persistent_ids(spark)
     with pytest.raises(RuntimeError, match="executor lost"):
-        bpe.train_bpe(df, n_merges=4, strategy="distributed")
+        bpe.train_bpe(df, n_merges=4, strategy=strategy)
     leaked = _persistent_ids(spark) - before
     assert not leaked, f"raise path left persisted RDDs: {sorted(leaked)}"
+
+
+def test_train_bpe_raise_in_dispatch_releases_histogram(spark, monkeypatch):
+    _check_bpe_raise(spark, monkeypatch, "distributed", bpe, "_train_distributed")
 
 
 def test_train_distributed_raise_mid_round_releases_vocab(spark, monkeypatch):
-    """A batch-selection raise inside the merge loop must release BOTH
-    the loop's live vocab checkpoint (inner finally) and the front
-    door's histogram handle (outer finally)."""
-    import pytest
+    _check_bpe_raise(spark, monkeypatch, "distributed", bpe, "_select_batch")
 
-    from rabbit_data_pipeline_spark.operators import bpe
 
-    df = spark.createDataFrame(
-        [(i, "low lower lowest newer newest") for i in range(10)],
-        ["doc_id", "text"],
-    )
-
-    def boom(*a, **k):
-        raise RuntimeError("bad batch")
-
-    monkeypatch.setattr(bpe, "_select_batch", boom)
-    before = _persistent_ids(spark)
-    with pytest.raises(RuntimeError, match="bad batch"):
-        bpe.train_bpe(df, n_merges=4, strategy="distributed")
-    leaked = _persistent_ids(spark) - before
-    assert not leaked, f"raise path left persisted RDDs: {sorted(leaked)}"
+@pytest.mark.parametrize("strategy", ["driver", "driver_topm", "distributed"])
+def test_train_bpe_collect_raise_releases(spark, monkeypatch, strategy):
+    """A failing collect hits the driver engines' histogram read and
+    the batched trainer's alphabet."""
+    _check_bpe_raise(spark, monkeypatch, strategy, type(spark.range(1)), "collect")

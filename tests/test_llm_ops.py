@@ -1174,10 +1174,13 @@ def test_broadcast_budget_rows_parses_spark_byte_strings(spark):
 
 
 def test_frontier_loops_agree_with_and_without_size_gated_broadcast(spark):
-    """r16 (VERDICT r15 #1): BFS, SSSP and connected components now
-    size-gate a broadcast of their counted-small sides, the same
-    pattern as pagerank/kcore. Forcing the budget to 0 must take the
-    shuffle fallback and return identical results."""
+    """BFS, SSSP and connected components size-gate a broadcast of
+    their counted-small sides, the same pattern as pagerank/kcore.
+    Forcing the budget to 0 must take the shuffle fallback and return
+    identical results; connected components then skips its node count,
+    since no broadcast can fire."""
+    import time
+
     from rabbit_data_pipeline_spark.operators.graph import (
         bfs_distances,
         connected_components,
@@ -1190,6 +1193,16 @@ def test_frontier_loops_agree_with_and_without_size_gated_broadcast(spark):
         [(u, v, 2) for u, v in und] + [(v, u, 2) for u, v in und], ["src", "dst", "w"]
     )
     pairs = spark.createDataFrame([("a", "b"), ("b", "c"), ("x", "y")], ["id_a", "id_b"])
+    sc = spark.sparkContext
+
+    def cc_with_jobs():
+        group = f"cc-jobs-{time.time_ns()}"
+        sc.setJobGroup(group, "connected_components job count")
+        try:
+            got = {r["id"]: r["component"] for r in connected_components(pairs).collect()}
+        finally:
+            sc.setJobGroup("", "")
+        return got, len(sc.statusTracker().getJobIdsForGroup(group))
 
     bfs = {r["node"]: r["dist"] for r in bfs_distances(edges, ["a"]).collect()}
     sssp = {r["node"]: r["dist"] for r in weighted_sssp(wedges, ["a"]).collect()}
@@ -1199,12 +1212,19 @@ def test_frontier_loops_agree_with_and_without_size_gated_broadcast(spark):
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "0")
         bfs0 = {r["node"]: r["dist"] for r in bfs_distances(edges, ["a"]).collect()}
         sssp0 = {r["node"]: r["dist"] for r in weighted_sssp(wedges, ["a"]).collect()}
-        cc0 = {r["id"]: r["component"] for r in connected_components(pairs).collect()}
+        cc0, jobs0 = cc_with_jobs()
+        # 40 bytes is a budget of one row: the node count runs, but no
+        # side of five nodes fits, so the plans match the budget-0 ones.
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "40")
+        cc1, jobs1 = cc_with_jobs()
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
     assert bfs0 == bfs == {"a": 0, "b": 1, "c": 2, "d": 3, "e": 2}
     assert sssp0 == sssp == {"a": 0, "b": 2, "c": 4, "d": 6, "e": 4}
-    assert cc0 == cc == {"a": "a", "b": "a", "c": "a", "x": "x", "y": "x"}
+    assert cc0 == cc1 == cc == {"a": "a", "b": "a", "c": "a", "x": "x", "y": "x"}
+    # The skipped count is one action: two Spark jobs under AQE (its
+    # aggregation's shuffle stage runs as a job of its own).
+    assert 0 < jobs1 - jobs0 <= 2, (jobs0, jobs1)
 
 
 def test_bfs_distances_hand_verified(spark):
