@@ -23,6 +23,7 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.types import DoubleType, LongType, StringType, StructField, StructType
 
 from rabbit_data_pipeline_spark.functions.exact import dsum, sql_dsum
@@ -61,10 +62,18 @@ def _events_queue(spark: SparkSession, sf_dir: str, doubled: bool = False) -> Da
     return stream.withColumn("ts", F.timestamp_micros("ts_us")).drop("ts_us")
 
 
+def _await_drain(q: StreamingQuery, timeout_s: float) -> None:
+    """Wait for an availableNow query to finish. On timeout, stop it and
+    raise: what its sink holds by then is a partial result."""
+    if not q.awaitTermination(timeout_s):
+        q.stop()
+        raise TimeoutError(f"streaming query {q.name or q.id} did not drain within {timeout_s} s")
+
+
 def _run_to_table(df: DataFrame, mode: str) -> DataFrame:
     name = f"rdps_sq_{uuid.uuid4().hex[:12]}"
     q = df.writeStream.format("memory").queryName(name).outputMode(mode).trigger(availableNow=True).start()
-    q.awaitTermination(300)
+    _await_drain(q, 300)
     return df.sparkSession.table(name)
 
 
@@ -432,5 +441,5 @@ def stream_rollup_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     table = os.path.join(tempfile.gettempdir(), f"rdps_rollup_{uuid.uuid4().hex[:12]}")
     ckpt = table + "_ckpt"
     q = rollup_write_stream(stream, table, ["event_type"], "value", ckpt)
-    q.awaitTermination(300)
+    _await_drain(q, 300)
     return finalize_rollup(spark.read.parquet(table), ["event_type"])

@@ -1,9 +1,14 @@
 """SparkSession factory tuned for this engine.
 
 Local testing runs ``local[N]``; the confs are chosen to also be the
-right defaults on a large cluster (AQE re-plans partition counts at
-runtime, so the static shuffle-partition number matters less than
-having AQE + skew-join handling on).
+right defaults on a large cluster. AQE coalesces shuffle partitions and
+splits skewed joins at runtime, so for batch queries the static
+``spark.sql.shuffle.partitions`` is only AQE's starting point. Streaming
+queries are not re-planned: a stateful query takes the session's count
+as its fixed state-partition count when its checkpoint is first created
+and keeps it on every restart, running one state-store task per
+partition in every micro-batch. The default is therefore one partition
+per task slot; ``SPARK_GRAFT_SHUFFLE`` overrides it.
 """
 
 from __future__ import annotations
@@ -26,53 +31,59 @@ TABLES = (
 )
 
 
-def get_spark(app_name: str = "rabbit-data-pipeline-spark") -> SparkSession:
+def task_slots() -> int:
+    """Task slots of the ``local[N]`` session: ``SPARK_GRAFT_CPUS``, or
+    every core this process may run on when it is unset or ``*``."""
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
-    builder = (
+    return len(os.sched_getaffinity(0)) if cpus == "*" else int(cpus)
+
+
+def spark_builder(app_name: str = "rabbit-data-pipeline-spark") -> SparkSession.Builder:
+    """The configured builder behind ``get_spark``, for callers that add
+    confs of their own (an event log, say) before ``getOrCreate``."""
+    slots = task_slots()
+    return (
         SparkSession.builder.appName(app_name)
-        .master(f"local[{cpus}]")
+        .master(f"local[{slots}]")
         # AQE: runtime partition coalescing + skew-join splitting. At
         # 100 TB this is what keeps one hot key from stalling a stage.
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        # Static hint only; AQE coalesces down, splits skew up.
-        .config("spark.sql.shuffle.partitions", os.environ.get("SPARK_GRAFT_SHUFFLE", "32"))
+        # Batch: AQE's starting point (it coalesces down, splits skew
+        # up). Streaming: the state-partition count a new checkpoint
+        # records for good, so each micro-batch runs this many
+        # state-store tasks; one per slot keeps that to a single wave.
+        .config("spark.sql.shuffle.partitions", os.environ.get("SPARK_GRAFT_SHUFFLE", str(slots)))
         # Arrow for the few pandas-UDF ops (multimodal/stateful).
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         # Dims up to 32 MB broadcast (TPC-H dims at any SF we test).
         .config("spark.sql.autoBroadcastJoinThreshold", str(32 * 1024 * 1024))
-        # 16g heap (round 12, was 8g): in local mode the driver JVM IS
-        # every executor; an 8g heap shared by 32 task threads left the
-        # long bench process GC-bound in its tail — across four r12
-        # idle windows a DIFFERENT victim query's sf1 min inflated
-        # 2-4x each run (bpe_train sf1 35.7s run-1, q_waiting_supplier
-        # 7.97s, q_json_extract 2.04s) while a fresh-JVM control of the
-        # same query sat at the uniform host shift. On a real cluster
-        # this is per-executor memory, sized by the deployer; 16g on
-        # the 128 GiB test host is still conservative.
+        # In local mode the driver JVM is every executor, so one heap
+        # serves all task threads of a long-lived process; 8g left such a
+        # process GC-bound in its tail. On a cluster this is per-executor
+        # memory, sized by the deployer.
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.ui.enabled", "false")
     )
-    return builder.getOrCreate()
 
 
-# Optimization round 15 (guide §5 "the driver should do almost no data
-# work" + §6 session file-listing caches): every builder call used to
-# re-run ``spark.read.parquet(path)`` per input table — a ~135 ms py4j
-# round trip + footer/schema read + file listing — and re-register the
-# temp view (~35 ms), summing to 30-50% of every benched query's wall.
-# A real warehouse resolves a table's schema from a catalog once per
-# session, not once per query, so load_tables now memoizes the ANALYZED
-# DataFrame handle per (SparkContext, path) keyed by a file fingerprint
-# (name/size/mtime_ns of the file or of every file in the directory).
-# This caches *plan metadata only*: every execution still scans the
-# parquet input — no rows, results or intermediates are retained, and
-# regenerated testdata invalidates the entry via the fingerprint.
-# View registration is skipped only when the same (name → path,
-# fingerprint) binding is already current, so alternating sf dirs in
-# one process (the bench's sf0.1/sf1 loops) re-register correctly.
+def get_spark(app_name: str = "rabbit-data-pipeline-spark") -> SparkSession:
+    return spark_builder(app_name).getOrCreate()
+
+
+# load_tables resolves a table's schema once per session, as a catalog
+# would, not once per query: re-running ``spark.read.parquet(path)``
+# costs a py4j round trip, a footer/schema read and a file listing
+# (~135 ms), and re-registering the temp view another ~35 ms. It
+# memoizes the ANALYZED DataFrame handle per (SparkContext, path), keyed
+# by a file fingerprint (name/size/mtime_ns of the file or of every file
+# in the directory). This caches *plan metadata only*: every execution
+# still scans the parquet input, and regenerated input invalidates the
+# entry via the fingerprint. View registration is skipped only when the
+# same (name → path, fingerprint) binding is already current, so
+# alternating sf dirs in one process re-register correctly.
 _DF_CACHE: dict[tuple[str, str], tuple[object, DataFrame]] = {}
 _VIEW_STATE: dict[tuple[str, str], tuple[str, object]] = {}
 
@@ -141,19 +152,16 @@ def load_tables(spark: SparkSession, sf_dir: str, names: tuple[str, ...] = TABLE
     return out
 
 
-# Optimization round 15, guide §2.5 "input skew: one huge unsplittable
-# file … repartition immediately after the read". The generated test
-# inputs are one parquet file with ONE row group per table (sf0.1) or
-# 2-8 files (the sf1 scaled copy), so a scan stage gets 1-8 tasks on a
-# 32-core machine and every compute-heavy per-row pass (Arrow minhash
-# signatures, regex token/quality scans, cosine math, codec decode)
-# runs nearly serially. The helper below returns a repartition width
-# ONLY when (a) the scan's estimated split count is below the session's
-# core count and (b) the table is small enough that one extra shuffle
-# of it is trivially repaid — at 100 TB (many files, > _SPREAD_MAX_BYTES)
-# it returns 0 and the plan is untouched, which is the scale-adaptive
-# behavior the optimization brief requires (no constant tuned to
-# local[32]). Both knobs are env-overridable for cluster profiles.
+# Input skew: the generated test inputs are one parquet file with ONE
+# row group per table (sf0.1) or 2-8 files (the sf1 scaled copy), so a
+# scan stage gets 1-8 tasks and every compute-heavy per-row pass (Arrow
+# minhash signatures, regex token/quality scans, cosine math, codec
+# decode) runs nearly serially. The helper below returns a repartition
+# width ONLY when (a) the scan's estimated split count is below the
+# session's core count and (b) the table is small enough that one extra
+# shuffle of it is trivially repaid. At 100 TB (many files,
+# > _SPREAD_MAX_BYTES) it returns 0 and the plan is untouched. Both
+# knobs are env-overridable for cluster profiles.
 _SPREAD_MAX_BYTES = int(os.environ.get("SPARK_GRAFT_SPREAD_MAX_BYTES", str(1 << 30)))
 _SPLIT_BYTES = 128 << 20  # spark.sql.files.maxPartitionBytes default
 
@@ -195,25 +203,23 @@ def scan_spread_hint(spark: SparkSession, sf_dir: str, name: str) -> int:
 def spread_scan(df: DataFrame, spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Apply scan_spread_hint: round-robin repartition so downstream
     per-row compute uses the whole machine. Callers project to the
-    needed columns FIRST (guide §2.3: shuffle fewer bytes)."""
+    needed columns FIRST, so the shuffle moves fewer bytes."""
     w = scan_spread_hint(spark, sf_dir, name)
     return df.repartition(w) if w else df
 
 
-# Optimization round 16, guide §4.2 "hand whole batches to vectorized
-# native libraries". The regex-heavy single-pass text scans have a
-# mapInArrow twin that runs the same patterns through pyarrow.compute
-# (RE2): measured 35-45% faster than the codegen'd JVM expressions on
-# the 10x documents table. The Arrow path pays a FIXED per-query
-# JVM→Python boundary cost (~0.1 s locally: worker round trip + Arrow
-# (de)serialization plan nodes), so on tiny inputs it is a measured
-# LOSS (sf0.1 documents, 0.58 MB: +33%) while past a few MB it wins
-# and keeps winning — at 100 TB the gate below is always true. The
-# threshold is the measured local breakeven with margin (~0.1 s
-# boundary ÷ 40% of ~10 MB/s-of-compressed-parquet regex throughput
-# ≈ 2.5 MB), env-overridable for cluster profiles; kill switch
-# SPARK_GRAFT_NO_ARROW_TEXT=1 forces the pure-JVM expressions
-# everywhere (a Python-less cluster profile).
+# The regex-heavy single-pass text scans have a mapInArrow twin that
+# runs the same patterns through pyarrow.compute (RE2): measured 35-45%
+# faster than the codegen'd JVM expressions on a 10x documents table.
+# The Arrow path pays a FIXED per-query JVM→Python boundary cost
+# (~0.1 s locally: worker round trip + Arrow (de)serialization plan
+# nodes), so on tiny inputs it is a measured LOSS (sf0.1 documents,
+# 0.58 MB: +33%) while past a few MB it wins and keeps winning — at
+# 100 TB the gate below is always true. The threshold is the measured
+# local breakeven with margin (~0.1 s boundary ÷ 40% of ~10 MB/s-of-
+# compressed-parquet regex throughput ≈ 2.5 MB), env-overridable for
+# cluster profiles; kill switch SPARK_GRAFT_NO_ARROW_TEXT=1 forces the
+# pure-JVM expressions everywhere (a Python-less cluster profile).
 _ARROW_TEXT_MIN_BYTES = int(
     os.environ.get("SPARK_GRAFT_ARROW_TEXT_MIN_BYTES", str(4 << 20))
 )

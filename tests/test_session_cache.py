@@ -1,5 +1,9 @@
-"""Round-15 optimization tests: load_tables plan-metadata memoization
-and the adaptive scan-spread helper (OPTIMIZATION_r15.md).
+"""Session tests: the shuffle-partition default, load_tables
+plan-metadata memoization and the adaptive scan-spread helper.
+
+The static shuffle-partition count is the state-partition count every
+new streaming query records, so it defaults to the session's task
+slots; ``SPARK_GRAFT_SHUFFLE`` overrides it.
 
 The memo caches ONLY the analyzed DataFrame handle (schema/plan) — the
 data is re-scanned on every action — and must invalidate when the
@@ -20,10 +24,32 @@ from rabbit_data_pipeline_spark.session import (
     _DF_CACHE,
     load_tables,
     scan_spread_hint,
+    spark_builder,
     spread_scan,
+    task_slots,
 )
 
 SF = "/root/testdata/sf0.001"
+
+
+def test_shuffle_partitions_default_to_task_slots(spark):
+    want = os.environ.get("SPARK_GRAFT_SHUFFLE", str(spark.sparkContext.defaultParallelism))
+    assert spark.conf.get("spark.sql.shuffle.partitions") == want
+    assert spark.sparkContext.defaultParallelism == task_slots()
+
+
+def test_spark_builder_takes_shuffle_default_from_slots(monkeypatch):
+    # A fresh builder per call: nothing here reaches the running session.
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "3")
+    monkeypatch.delenv("SPARK_GRAFT_SHUFFLE", raising=False)
+    opts = spark_builder()._options
+    assert (opts["spark.master"], opts["spark.sql.shuffle.partitions"]) == ("local[3]", "3")
+    monkeypatch.setenv("SPARK_GRAFT_SHUFFLE", "200")
+    assert spark_builder()._options["spark.sql.shuffle.partitions"] == "200"
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "*")
+    assert task_slots() == len(os.sched_getaffinity(0))
+    monkeypatch.delenv("SPARK_GRAFT_CPUS")
+    assert task_slots() == len(os.sched_getaffinity(0))
 
 
 def test_load_tables_memoizes_handle(spark):

@@ -10,14 +10,16 @@ published file, which is how the watermark actually advances."""
 
 from __future__ import annotations
 
+import os
 import time
 import uuid
 
+import pytest
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
 from rabbit_data_pipeline_spark.sinks.stream import memory_write_stream, queue_dir_write_stream, to_message
-from rabbit_data_pipeline_spark.sources.stream import queue_dir_publish, queue_dir_stream
+from rabbit_data_pipeline_spark.sources.stream import MESSAGE_SCHEMA, queue_dir_publish, queue_dir_stream, rate_stream
 from rabbit_data_pipeline_spark.streaming import (
     parse_json_messages,
     session_window_agg,
@@ -205,9 +207,88 @@ stream_rollup:
     sch = Scheduler.from_yaml(spark, spec)
     sch.run("stream_rollup")
     assert len(sch.streaming_queries) == 1
-    sch.streaming_queries[0].awaitTermination(120)
+    q = sch.streaming_queries[0]
+    q.awaitTermination(120)
     rows = {(r.user_id, r.total, r.n) for r in spark.table(name).collect()}
     assert rows == {("u1", 7, 2), ("u2", 9, 1)}
+    # A fresh checkpoint records the session's shuffle count as its state
+    # partitions: one state-store task per task slot per micro-batch.
+    want = int(os.environ.get("SPARK_GRAFT_SHUFFLE", spark.sparkContext.defaultParallelism))
+    assert q.lastProgress["stateOperators"][0]["numShufflePartitions"] == want
+
+
+def _drain_windows(spark, qdir, ckpt, sink) -> set[int]:
+    """One availableNow drain of 1-minute windows per user into `sink`
+    (update mode, foreachBatch); returns the state-partition counts its
+    micro-batches reported."""
+    parsed = parse_json_messages(queue_dir_stream(spark, qdir), VALUE_SCHEMA)
+    agg = windowed_agg(
+        parsed,
+        group_cols=["user_id"],
+        aggs=[F.sum("amount").alias("total"), F.count("*").alias("n")],
+        window_duration="1 minute",
+        watermark="10 minutes",
+    )
+    q = (
+        agg.writeStream.outputMode("update")
+        .foreachBatch(sink)
+        .option("checkpointLocation", ckpt)
+        .trigger(availableNow=True)
+        .start()
+    )
+    assert q.awaitTermination(120)
+    return {p["stateOperators"][0]["numShufflePartitions"] for p in q.recentProgress if p["stateOperators"]}
+
+
+def test_restart_keeps_checkpoint_state_partitions(spark, tmp_path):
+    """A checkpoint keeps the state-partition count it was created with:
+    a query first started at 32 shuffle partitions restarts at 32 under
+    the session default, and its window state carries over intact."""
+    qdir, ckpt = str(tmp_path / "q"), str(tmp_path / "ckpt")
+    final = {}
+
+    def sink(batch, _epoch):
+        for r in batch.collect():
+            final[(r.window_start, r.user_id)] = (r.total, r.n)
+
+    _publish(qdir, [
+        {"key": "1", "value": {"user_id": "u1", "amount": 3}, "ts": _ts(0)},
+        {"key": "2", "value": {"user_id": "u2", "amount": 5}, "ts": _ts(1.5)},
+    ])
+    default = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "32")
+    try:
+        assert _drain_windows(spark, qdir, ckpt, sink) == {32}
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", default)
+    # The second file adds to both first-run windows and opens a new one.
+    _publish(qdir, [
+        {"key": "3", "value": {"user_id": "u1", "amount": 4}, "ts": _ts(0.5)},
+        {"key": "4", "value": {"user_id": "u2", "amount": 6}, "ts": _ts(1.2)},
+        {"key": "5", "value": {"user_id": "u1", "amount": 7}, "ts": _ts(3)},
+    ])
+    assert _drain_windows(spark, qdir, ckpt, sink) == {32}
+
+    batch = (
+        parse_json_messages(spark.read.schema(MESSAGE_SCHEMA).json(qdir), VALUE_SCHEMA)
+        .groupBy(F.window("ts", "1 minute").start.alias("window_start"), "user_id")
+        .agg(F.sum("amount").alias("total"), F.count("*").alias("n"))
+    )
+    assert final == {(r.window_start, r.user_id): (r.total, r.n) for r in batch.collect()}
+    # u1@0m (3+4) and u2@1m (5+6) needed the first run's state.
+    assert sorted(final.values()) == [(7, 1), (7, 2), (11, 2)]
+
+
+def test_await_drain_stops_and_raises_on_timeout(spark):
+    """A drain that outlives its timeout is stopped and raises, so the
+    registry never reads a half-filled memory table as a result."""
+    from rabbit_data_pipeline_spark.queries.streaming_q import _await_drain
+
+    name = f"slow_{uuid.uuid4().hex[:8]}"
+    q = rate_stream(spark).writeStream.format("memory").queryName(name).trigger(availableNow=True).start()
+    with pytest.raises(TimeoutError, match="did not drain"):
+        _await_drain(q, 0.001)
+    assert not q.isActive
 
 
 def test_sessionize_stateful(spark, tmp_path):

@@ -35,31 +35,16 @@ def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     os.makedirs(EVENTLOG_DIR, exist_ok=True)
 
-    from pyspark.sql import SparkSession
+    from rabbit_data_pipeline_spark.session import spark_builder
 
-    from rabbit_data_pipeline_spark.session import get_spark
-
-    # Event log must be set before session creation; get_spark caches.
-    SparkSession.builder.config("spark.eventLog.enabled", "true").config(
-        "spark.eventLog.dir", EVENTLOG_DIR
-    )
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
+    # The event log must be on before the session starts, so add it to
+    # the package's own builder rather than to a running session.
     spark = (
-        SparkSession.builder.appName("rdps-profile")
-        .master(f"local[{cpus}]")
+        spark_builder("rdps-profile")
         .config("spark.eventLog.enabled", "true")
         .config("spark.eventLog.dir", EVENTLOG_DIR)
         .config("spark.eventLog.compress", "false")
         .config("spark.eventLog.rolling.enabled", "false")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.shuffle.partitions", os.environ.get("SPARK_GRAFT_SHUFFLE", "32"))
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.autoBroadcastJoinThreshold", str(32 * 1024 * 1024))
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
         .getOrCreate()
     )
     spark.sparkContext.setLogLevel("ERROR")
